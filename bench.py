@@ -151,7 +151,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
 
-    from elastic_freight_spark.session import get_spark, load_tables
+    from elastic_freight_spark.session import get_spark, load_tables, warm_per_corpus
 
     # console-progress bars interleave with stdout and tail-truncated
     # the round-3 JSON line (BENCH_r03 recorded "parsed": null) — keep
@@ -180,85 +180,8 @@ def main() -> None:
     # (it is real work a deployment pays once per corpus), and every
     # query then measures its steady-state plan, so prev_ratio
     # compares like against like run-over-run.
-    from elastic_freight_spark.operators import graph, search, text, vectors
-
-    # Round 11: the pre-pass builds run overlapped from a small thread
-    # pool (optimization guide §2.6 — Spark's scheduler happily runs
-    # several jobs at once; the tail of one build back-fills cores the
-    # next build's early stages leave idle). Dependent builds are
-    # expressed as CHAINS (one thread runs a parent cache build, then
-    # its dependents) rather than a global barrier, so e.g. the
-    # shingle-dependent dedup builds start the moment shingles are
-    # cached instead of waiting for the slowest independent build.
-    # Within a chain nothing double-builds; across chains every build
-    # touches a distinct cache. The line item still measures the same
-    # thing — wall-clock to build every serve-many cache — it just no
-    # longer serializes builds a deployment would overlap. Round-11
-    # cache additions charged here like every other per-corpus index
-    # build: the scored candidate-pair frame (three dedup policies
-    # consume it verbatim), both minhash signature families, doc_len +
-    # the term-df dictionary, and the portable coded corpus + LSH
-    # bucket table the ANN tier serves from (pq_encode's docstring:
-    # the coded table is what a 100 TB deployment persists).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _chain(*fns):
-        def run():
-            for fn in fns:
-                fn()
-        return run
-
-    def _text_chain():
-        # the three dedup builds depend ONLY on the shingle cache and
-        # not on each other: build shingles first, then fan the
-        # dependents out on their own small pool (they were the
-        # longest serial chain — the pre-pass critical path once the
-        # co-supply build was fixed).
-        text.shingle_sets(spark, sf_dir).count()
-
-        def _lsh_chain():
-            # sigs → banded candidates → exact-verified pairs: the
-            # round-11 serve-many frames of the scale-default dedup
-            # policy (materializing verified also materializes the
-            # persisted candidate frame it reads)
-            text.minhash_signatures(spark, sf_dir).count()
-            text.lsh_verified_pairs(spark, sf_dir).count()
-
-        deps = [
-            lambda: text.capped_pair_intersections(spark, sf_dir).count(),
-            _lsh_chain,
-            lambda: text.portable_minhash_signatures(spark, sf_dir).count(),
-        ]
-        with ThreadPoolExecutor(max_workers=3) as p2:
-            for _ in p2.map(lambda fn: fn(), deps):
-                pass
-
-    warm_chains = [
-        _chain(lambda: graph.cosupply_edges(spark, sf_dir).count()),
-        _text_chain,
-        _chain(
-            lambda: [d.count() for d in search.indexed_postings(spark, sf_dir)],
-            lambda: search.token_df(spark, sf_dir).count(),
-        ),
-        _chain(
-            lambda: vectors._pq_books_portable(spark, sf_dir),
-            lambda: vectors._pqp_coded(spark, sf_dir).count(),
-        ),
-        # Round 12: the learned-PQ chain (_pq_books → _pq_coded,
-        # ~15 s — the r11 warm pass's critical path) is NOT built
-        # here any more: its only consumers (ann_ivfpq_cosine,
-        # pq_quantization_error, ann_recall_report) are registry
-        # queries outside the bench HEADLINE, so the bench total was
-        # charging for an index no timed query reads. The cache
-        # itself stays — registry consumers build it on first touch.
-        # ivf_index stays: ann_ivf_cosine (HEADLINE) serves from it.
-        _chain(lambda: vectors.ivf_index(spark, sf_dir)[1].count()),
-        _chain(lambda: vectors.lsh_index(spark, sf_dir).count()),
-    ]
     t0 = time.perf_counter()
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        for _ in pool.map(lambda fn: fn(), warm_chains):
-            pass
+    warm_per_corpus(spark, sf_dir)
     timings["cache_warm_pre_pass"] = round(time.perf_counter() - t0, 3)
 
     # Machine-speed canary (round 8): a FIXED pure-CPU job — no I/O,
@@ -396,7 +319,7 @@ def main() -> None:
                     file=sys.stderr,
                 )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     full = {
         "metric": "headline_queries_total_sec",
         "value": total,
@@ -487,7 +410,7 @@ def _prev_bench(repo_dir: str):
     Prefers the BENCH_FULL_r{N}.json archives (full per-query detail,
     copied from BENCH_LOCAL.json at each round start — the driver's
     own BENCH_r{N}.json carries only the compact summary line since
-    round 7). Falls back to parsing/salvaging BENCH_r{N}.json, walking
+    round 7). Falls back to parsing BENCH_r{N}.json, walking
     backwards past crash records (a failed round stores
     ``{"rc": 1, "parsed": null}`` — BENCH_r02 is one) so a regression
     diff always compares against real timings.
@@ -524,19 +447,6 @@ def _prev_bench(repo_dir: str):
             data = data["parsed"]
         if isinstance(data.get("queries"), dict):
             return os.path.basename(last), data
-        # salvage: BENCH_r03's JSON line was tail-truncated by console
-        # noise, leaving the timings inside a raw "tail" string —
-        # recover the name→seconds pairs up to the closing of the
-        # queries dict (everything before `}, "sf"`)
-        tail = data.get("tail")
-        if isinstance(tail, str) and '"queries"' not in tail:
-            qpart = tail.split('}, "sf"')[0]
-            pairs = dict(
-                (m.group(1), float(m.group(2)))
-                for m in re.finditer(r'"(\w+)": ([0-9.]+)', qpart)
-            )
-            if len(pairs) >= 10:
-                return os.path.basename(last) + " (salvaged)", {"queries": pairs}
     return None, None
 
 

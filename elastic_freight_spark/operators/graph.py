@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from elastic_freight_spark.registry import query
-from elastic_freight_spark.session import load_tables
+from elastic_freight_spark.session import load_tables, per_corpus
 
 TOPK_PARTNERS = 5
 
@@ -75,20 +75,12 @@ _EDGES_SQL = f"""
       ) WHERE rk <= {TOPK_PARTNERS}
 """
 
-# edges cached per (session, corpus): triangle census + degree
+# edges memoized per (session, corpus): triangle census + degree
 # histogram each read the edge list from several branches — one
-# materialization serves them all (the _SHINGLE_CACHE discipline).
-_EDGE_CACHE: dict = {}
-
-
+# materialization serves them all.
+@per_corpus
 def cosupply_edges(spark, sf_dir, top_k: int = TOPK_PARTNERS):
     """Undirected (u < v) top-k strongest co-supply edges."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), top_k)
-    cached = _EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
     from pyspark.sql import Window as W
 
     ps = (
@@ -125,15 +117,13 @@ def cosupply_edges(spark, sf_dir, top_k: int = TOPK_PARTNERS):
             W.partitionBy("src").orderBy(F.col("w").desc(), "dst")
         ),
     ).filter(F.col("rk") <= int(top_k))
-    edges = (
+    return (
         top.select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
         )
         .distinct()
         .persist()
     )
-    _EDGE_CACHE[key] = edges
-    return edges
 
 
 @query(

@@ -1174,8 +1174,8 @@ def agg_equidepth_histogram(spark, sf_dir):
         .withColumn("b", F.expr("cast(floor(v) as bigint) div 100"))
         # round 12: distinct-price-bounded; feeds bucketed_cum (2
         # refs) + n1 — checkpointed so the lineitem scan + groupBy
-        # runs once, not 3x (8-core A/B receipts in
-        # OPTIMIZATION_r12.md)
+        # runs once, not 3x (8-core A/B receipts in the message of
+        # commit a0a5cb9)
         .localCheckpoint(eager=True)
     )
     cum = bucketed_cum(counts, "v", "b", ["c"])
@@ -1408,8 +1408,8 @@ def customer_rfm_segments(spark, sf_dir):
     )
     # Round 12 (r11 verdict item 3): re-measured at 8 AND 32 cores —
     # the round-6 "checkpoint is 1.7x SLOWER" verdict no longer
-    # reproduces (flat at both widths, A/B receipts in
-    # OPTIMIZATION_r12.md). Checkpointed: the customer-bounded frame
+    # reproduces (flat at both widths, A/B receipts in the message of
+    # commit a0a5cb9). Checkpointed: the customer-bounded frame
     # feeds 3 dist_rank calls (3 references each) + the n1 count, so
     # the checkpoint replaces ~10 orders scans + groupBys with one —
     # wall-clock-flat locally where idle cores overlap the duplicate
@@ -1604,7 +1604,7 @@ def part_abc_classification(spark, sf_dir):
         # round 12: distinct-revenue-bounded frame feeds bucketed_cum
         # (2 refs) + tot — checkpointed so the lineitem scan +
         # two-level aggregate runs once, not 3x (8-core A/B receipts
-        # in OPTIMIZATION_r12.md)
+        # in the message of commit a0a5cb9)
         .localCheckpoint(eager=True)
     )
     cum = bucketed_cum(counts, "rev", "b", ["mass"], ascending=False)

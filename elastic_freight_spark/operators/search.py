@@ -25,12 +25,10 @@ to 9 decimals like every float-scoring query in this engine.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from elastic_freight_spark.registry import query
-from elastic_freight_spark.session import load_tables
+from elastic_freight_spark.session import load_tables, per_corpus
 
 QUERY_TERMS = ("data", "system", "model", "index")
 
@@ -56,13 +54,10 @@ def build_postings(docs):
     return postings, doc_len
 
 
-# (applicationId, abspath(sf_dir)) → persisted postings DataFrame.
 # MEMORY_AND_DISK (persist default): at 100 TB the postings spill to
 # local disk, which is still ~corpus-size I/O paid ONCE instead of
 # once per scoring query per scalar.
-_POSTINGS_CACHE: dict = {}
-
-
+@per_corpus
 def indexed_postings(spark, sf_dir):
     """(postings, doc_len) BOTH persisted per (session, corpus) — the
     serve-many-queries entry point. All downstream scoring plans read
@@ -73,20 +68,14 @@ def indexed_postings(spark, sf_dir):
     family references it twice per query: the avgdl scalar + the
     per-doc join). A Lucene index stores per-doc lengths in its norms
     file; persisting the doc-sized frame is the same move."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = _POSTINGS_CACHE.get(key)
-    if hit is None:
-        docs = load_tables(spark, sf_dir)["documents"]
-        postings, _ = build_postings(docs)
-        postings = postings.persist()
-        doc_len = (
-            postings.groupBy("doc_id").agg(F.sum("tf").alias("dl")).persist()
-        )
-        hit = (postings, doc_len)
-        _POSTINGS_CACHE[key] = hit
-    return hit
+    docs = load_tables(spark, sf_dir)["documents"]
+    postings, _ = build_postings(docs)
+    postings = postings.persist()
+    doc_len = postings.groupBy("doc_id").agg(F.sum("tf").alias("dl")).persist()
+    return postings, doc_len
 
 
+@per_corpus
 def token_df(spark, sf_dir):
     """Vocab-sized (token, df) document-frequency dictionary,
     persisted per (session, corpus) — the term-dictionary face of the
@@ -94,17 +83,8 @@ def token_df(spark, sf_dir):
     full-vocab df aggregate from two plan branches per run and
     ``search_fuzzy_suggest`` from another; each re-shuffled the whole
     postings frame."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), "df")
-    df = _POSTINGS_CACHE.get(key)
-    if df is None:
-        postings, _ = indexed_postings(spark, sf_dir)
-        df = (
-            postings.groupBy("token")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .persist()
-        )
-        _POSTINGS_CACHE[key] = df
-    return df
+    postings, _ = indexed_postings(spark, sf_dir)
+    return postings.groupBy("token").agg(F.count(F.lit(1)).alias("df")).persist()
 
 
 @query(

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from elastic_freight_spark.registry import query
-from elastic_freight_spark.session import load_tables
+from elastic_freight_spark.session import load_tables, per_corpus
 
 # ---------------------------------------------------------------------------
 # Exact dedup (X1)
@@ -293,34 +293,23 @@ _SHINGLE_EXPR = (
 )
 
 # shingle-set frame persisted per (session, corpus) — the same
-# serve-many-policies discipline as search's _POSTINGS_CACHE: every
+# serve-many-policies discipline as search's postings: every
 # near-dup path (signature build, band join sides, exact-verify join
 # sides) re-reads the cached sets, so the documents `text` column is
 # tokenized+shingled exactly once per session instead of once per
 # lineage branch (dedup_corpus_lsh alone has four such branches).
-_SHINGLE_CACHE: dict = {}
-
-
+@per_corpus
 def shingle_sets(spark, sf_dir):
     """doc_id → (sh: distinct 3-gram shingle array, n: set size),
     persisted per (session, corpus)."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    sets = _SHINGLE_CACHE.get(key)
-    if sets is None:
-        toks = load_tables(spark, sf_dir)["documents"].select(
-            "doc_id", F.split(F.lower("text"), " ").alias("tok")
-        )
-        sets = (
-            toks.select(
-                "doc_id", F.array_distinct(F.expr(_SHINGLE_EXPR)).alias("sh")
-            )
-            .select("doc_id", "sh", F.size("sh").alias("n"))
-            .persist()
-        )
-        _SHINGLE_CACHE[key] = sets
-    return sets
+    toks = load_tables(spark, sf_dir)["documents"].select(
+        "doc_id", F.split(F.lower("text"), " ").alias("tok")
+    )
+    return (
+        toks.select("doc_id", F.array_distinct(F.expr(_SHINGLE_EXPR)).alias("sh"))
+        .select("doc_id", "sh", F.size("sh").alias("n"))
+        .persist()
+    )
 
 
 NGRAM_DF_CAP = 50  # default df cap: shingles in more docs propose no pairs
@@ -414,9 +403,7 @@ CAND_MIN_SUPPORT = 2  # a pair must share >= 2 rare shingles to be scored
 # pipeline materializes once and scores many policies against —
 # corpus-linear by the df-cap bound, so persisting it is the
 # production shape, not a bench trick.
-_CAPPED_PAIRS_CACHE: dict = {}
-
-
+@per_corpus
 def capped_pair_intersections(
     spark, sf_dir, df_cap: int = NGRAM_DF_CAP, min_support: int = CAND_MIN_SUPPORT
 ):
@@ -455,17 +442,6 @@ def capped_pair_intersections(
     the same JVM transform), so the exemption adds ZERO
     joins/shuffles/bytes and the 10× candidate prune is preserved
     for the bulk of the corpus."""
-    import os as _os
-
-    cache_key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        df_cap,
-        min_support,
-    )
-    cached = _CAPPED_PAIRS_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
     sets = shingle_sets(spark, sf_dir)
     shingles = sets.select(
         (
@@ -525,7 +501,7 @@ def capped_pair_intersections(
     # candidate stage per broadcast and ran 5× slower) — while each
     # set array joins in exactly twice regardless of how many pairs
     # reference it.
-    scored = (
+    return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
         .select(
@@ -537,8 +513,6 @@ def capped_pair_intersections(
         )
         .persist()
     )
-    _CAPPED_PAIRS_CACHE[cache_key] = scored
-    return scored
 
 
 _PAIRS_CAPPED_ORACLE = f"""
@@ -637,13 +611,9 @@ LSH_BANDS = 8  # 8 bands × 4 rows
 # both verify-join sides), each of which re-ran the build (plan-branch
 # expression-id drift defeats ReuseExchange). One materialization per
 # hash family now serves all branches and all consumer queries; both
-# builds are charged once in bench.py's warm pre-pass.
-_SIG_CACHE: dict = {}
-_PORTABLE_SIG_CACHE: dict = {}
-_LSH_CAND_CACHE: dict = {}
-_LSH_VERIFIED_CACHE: dict = {}
-
-
+# builds are charged once in the serve-many warm pass
+# (session.warm_per_corpus).
+@per_corpus
 def minhash_signatures(spark, sf_dir, num_perms: int = MINHASH_PERMS):
     """doc_id → minhash signature array (xxhash64-based permutations).
 
@@ -655,14 +625,8 @@ def minhash_signatures(spark, sf_dir, num_perms: int = MINHASH_PERMS):
     |docs| × num_perms longs regardless of shingle count: the property
     that makes this the 100 TB signature plan. Reads the per-session
     shingle-set cache, so the corpus text is shingled once across all
-    near-dup policies; the result is itself cached per session
-    (``_SIG_CACHE``) so the LSH/dedup family shares one build."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), num_perms)
-    cached = _SIG_CACHE.get(key)
-    if cached is not None:
-        return cached
+    near-dup policies; the result is itself memoized per session
+    so the LSH/dedup family shares one build."""
     shingles = shingle_sets(spark, sf_dir).select(
         "doc_id", F.explode("sh").alias("shingle")
     )
@@ -672,13 +636,12 @@ def minhash_signatures(spark, sf_dir, num_perms: int = MINHASH_PERMS):
             for p in range(num_perms)
         ]
     )
-    sigs = mins.select(
+    return mins.select(
         "doc_id", F.array(*[f"_m{p}" for p in range(num_perms)]).alias("signature")
     ).persist()
-    _SIG_CACHE[key] = sigs
-    return sigs
 
 
+@per_corpus
 def lsh_candidate_pairs(spark, sf_dir):
     """Banded-LSH candidate pairs: band the 32-perm signature into
     8 buckets of 4, hash each band, join docs sharing any band
@@ -696,12 +659,6 @@ def lsh_candidate_pairs(spark, sf_dir):
     frame is near-dup-pair-bounded: |pairs sharing a band bucket|,
     the same candidate table a 100 TB dedup pipeline materializes
     once per corpus snapshot."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    cached = _LSH_CAND_CACHE.get(key)
-    if cached is not None:
-        return cached
     sigs = minhash_signatures(spark, sf_dir)
     r = MINHASH_PERMS // LSH_BANDS
     bands = sigs.select(
@@ -739,18 +696,17 @@ def lsh_candidate_pairs(spark, sf_dir):
     # build (the signatures every downstream policy needs ride along
     # as cand's sig_a/sig_b columns), so once the banded candidates
     # are materialized the corpus-sized signature frame (|docs| × 32
-    # longs at 100 TB) has no reader left — drop it from storage and
-    # from the cache dict (a hypothetical later direct caller
-    # rebuilds and re-persists correctly). persist() is lazy: the
-    # eager count below makes sure the candidate blocks exist before
-    # the frame they derive from is released.
+    # longs at 100 TB) has no reader left — release it from storage
+    # and from the memo (a hypothetical later direct caller rebuilds
+    # and re-persists correctly). persist() is lazy: the eager count
+    # below makes sure the candidate blocks exist before the frame
+    # they derive from is released.
     cand.count()
-    _LSH_CAND_CACHE[key] = cand
-    sigs.unpersist()
-    _SIG_CACHE.pop((key[0], key[1], MINHASH_PERMS), None)
+    minhash_signatures.release(spark, sf_dir)
     return cand
 
 
+@per_corpus
 def lsh_verified_pairs(spark, sf_dir, threshold: float = 0.35):
     """(doc_a, doc_b) banded-LSH candidates whose EXACT 3-gram Jaccard
     clears ``threshold`` — the shared verify stage of the scale-default
@@ -759,16 +715,6 @@ def lsh_verified_pairs(spark, sf_dir, threshold: float = 0.35):
     subtree (the shared-fragment rule: copies desynchronize silently),
     and each re-executed it per call. Persisted per
     (session, corpus, threshold); duplicate-pair-sized output."""
-    import os as _os
-
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        threshold,
-    )
-    cached = _LSH_VERIFIED_CACHE.get(key)
-    if cached is not None:
-        return cached
     cand = lsh_candidate_pairs(spark, sf_dir).select("doc_a", "doc_b")
     sets = shingle_sets(spark, sf_dir)
     a = sets.select(
@@ -781,7 +727,7 @@ def lsh_verified_pairs(spark, sf_dir, threshold: float = 0.35):
         F.col("sh").alias("sh_b"),
         F.col("n").alias("nb"),
     )
-    verified = (
+    return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
         .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
@@ -794,8 +740,6 @@ def lsh_verified_pairs(spark, sf_dir, threshold: float = 0.35):
         .select("doc_a", "doc_b")
         .persist()
     )
-    _LSH_VERIFIED_CACHE[key] = verified
-    return verified
 
 
 @query("neardup_minhash_lsh")  # rows-only: xxhash64 signatures aren't SQL-portable
@@ -2487,35 +2431,28 @@ PORTABLE_PERMS = 16  # 4 bands x 4 rows
 PORTABLE_BANDS = 4
 
 
+@per_corpus
 def portable_minhash_signatures(spark, sf_dir):
     """doc_id → m0..m15 minhash columns, hash_p(s) = md5('p:' || s).
 
     Same one-pass parallel-MIN aggregation as
     ``minhash_signatures`` (shuffle carries |docs| rows of 16
     32-char strings); min over lowercase-hex md5 strings is plain
-    lexicographic order, identical in Spark and DuckDB. Cached per
-    session (``_PORTABLE_SIG_CACHE``): the 16 md5-per-shingle build
+    lexicographic order, identical in Spark and DuckDB. Memoized per
+    session: the 16 md5-per-shingle build
     is the most hash-intensive pass in the text tier, and each of
     its two consumer queries referenced it from three plan branches
     (bands + both signature-join sides) — 6 rebuilds per bench run
     before round 11, one materialization after."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    cached = _PORTABLE_SIG_CACHE.get(key)
-    if cached is not None:
-        return cached
     sh = shingle_sets(spark, sf_dir).select(
         "doc_id", F.explode("sh").alias("shingle")
     )
-    sigs = sh.groupBy("doc_id").agg(
+    return sh.groupBy("doc_id").agg(
         *[
             F.min(F.md5(F.concat(F.lit(f"{p}:"), F.col("shingle")))).alias(f"m{p}")
             for p in range(PORTABLE_PERMS)
         ]
     ).persist()
-    _PORTABLE_SIG_CACHE[key] = sigs
-    return sigs
 
 
 def _pm_sig_sql() -> str:

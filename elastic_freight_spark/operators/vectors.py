@@ -23,10 +23,12 @@ Scale notes (100 TB embeddings):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, functions as F
 
 from elastic_freight_spark.registry import query
-from elastic_freight_spark.session import load_tables
+from elastic_freight_spark.session import load_tables, per_corpus
 
 # dot(a, b) over float32 lists in double, as a sequential fold —
 # Spark SQL expression over array<double> columns
@@ -55,13 +57,18 @@ def _dlit(nested) -> F.Column:
     for the 8 × 64 × 8 learned books). ``repr(float)`` is the IEEE
     shortest round-trip form and Spark's ``D`` suffix parses it back
     to the bit-identical double (verified over 2005 adversarial
-    values incl. 1e-300, -0.0)."""
+    values incl. 1e-300, -0.0). NaN and ±inf have no such literal, so
+    they raise here instead of as a parse error inside Spark."""
+
+    def lit(x) -> str:
+        x = float(x)
+        if not math.isfinite(x):
+            raise ValueError("non-finite codebook value")
+        return repr(x) + "D"
+
     return F.expr(
         "array("
-        + ",".join(
-            "array(" + ",".join(repr(float(x)) + "D" for x in row) + ")"
-            for row in nested
-        )
+        + ",".join("array(" + ",".join(lit(x) for x in row) + ")" for row in nested)
         + ")"
     )
 
@@ -77,7 +84,10 @@ def _argmin_idx(d2: F.Column) -> F.Column:
     k × sub_d codebook/centroid LITERAL — every reference duplicates
     thousands of literal nodes in the plan the optimizer must walk
     and every task binary must ship. The fold references ``d2`` once,
-    halving the PQ/IVF build plans."""
+    halving the PQ/IVF build plans.
+
+    The two forms diverge on an empty or all-NULL array: the fold
+    returns 0 where the two-pass form returns NULL."""
     init = F.struct(
         F.lit(float("inf")).alias("d"),
         F.lit(0).cast("bigint").alias("i"),
@@ -378,21 +388,12 @@ def lsh_bucket_table(
 # was re-executed once per plan branch referencing it (query side +
 # corpus side of ann_lsh_cosine, again inside ann_recall_report).
 # A deployment stores the bucket table next to the vectors — it IS
-# the LSH index; the session cache is the local-mode analogue, built
+# the LSH index; the session memo is the local-mode analogue, built
 # once and charged in bench.py's cache_warm_pre_pass.
-_LSH_TB_CACHE: dict = {}
-
-
+@per_corpus
 def lsh_index(spark, sf_dir):
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    hit = _LSH_TB_CACHE.get(key)
-    if hit is None:
-        e = with_unit_vectors(load_tables(spark, sf_dir)["embeddings"])
-        hit = lsh_bucket_table(e).persist()
-        _LSH_TB_CACHE[key] = hit
-    return hit
+    e = with_unit_vectors(load_tables(spark, sf_dir)["embeddings"])
+    return lsh_bucket_table(e).persist()
 
 
 @query("ann_lsh_cosine")  # rows-only: xxhash64-derived planes aren't SQL-portable
@@ -795,28 +796,13 @@ def ivf_probe_cells(spark, q: DataFrame, centroids: list, n_probe: int = 2) -> D
 # assigned ONCE, then serves every subsequent ANN query from the
 # cached cell layout — the same serve-many discipline as search's
 # postings cache and text's shingle cache. A 100 TB deployment writes
-# `assigned` bucketed by cell instead; the session cache is the
+# `assigned` bucketed by cell instead; the session memo is the
 # local-mode analogue.
-_IVF_CACHE: dict = {}
-
-# corpus row counts per (session, corpus) — consumed by adaptive cell sizing
-_N_CACHE: dict = {}
-
-# semdedup's m=2 multi-assigned frame per (session, corpus) — round 11
-_SEMDEDUP_ASSIGN_CACHE: dict = {}
-
-
+@per_corpus
 def ivf_index(spark, sf_dir, n_cells: int = 16, seed: int = 42):
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), n_cells, seed)
-    hit = _IVF_CACHE.get(key)
-    if hit is None:
-        e = with_unit_vectors(load_tables(spark, sf_dir)["embeddings"])
-        centroids, assigned = ivf_assign(e, n_cells=n_cells, seed=seed)
-        hit = (centroids, assigned.persist())
-        _IVF_CACHE[key] = hit
-    return hit
+    e = with_unit_vectors(load_tables(spark, sf_dir)["embeddings"])
+    centroids, assigned = ivf_assign(e, n_cells=n_cells, seed=seed)
+    return centroids, assigned.persist()
 
 
 @query("ann_ivf_cosine")  # rows-only: learned centroids aren't SQL-portable
@@ -893,6 +879,20 @@ def ivf_multi_assign(df, centroids, m: int = 2):
     return df.withColumn("cell", F.explode(cells))
 
 
+@per_corpus
+def _semdedup_assigned(spark, sf_dir):
+    """semdedup's m=2 multi-assigned frame (round 11): it feeds BOTH
+    sides of the cell self-join, so unpersisted the centroid-literal
+    assignment expressions executed twice per call (expression-id
+    drift defeats ReuseExchange); this is the bucketed-by-cell table
+    ``semdedup_ivf_cells``' 100 TB note describes. The corpus count
+    that sizes the cells (column-pruned) runs once with it."""
+    e = with_unit_vectors(load_tables(spark, sf_dir)["embeddings"])
+    n_cells = max(8, min(4096, (2 * e.count()) // 512))
+    centroids, _ = ivf_index(spark, sf_dir, n_cells=n_cells)
+    return ivf_multi_assign(e, centroids, m=2).persist()
+
+
 @query("semdedup_ivf_cells")  # rows-only: learned centroids aren't SQL-portable
 def semdedup_ivf_cells(spark, sf_dir):
     """SemDeDup-shaped semantic dedup (Abbas et al. 2023: cluster the
@@ -914,25 +914,7 @@ def semdedup_ivf_cells(spark, sf_dir):
     scan, m=2 multi-assign covering cell boundaries) is unchanged.
     At 100 TB `assigned` is written bucketed by cell so the
     self-join is co-located (no shuffle)."""
-    import os as _os
-
-    e = with_unit_vectors(load_tables(spark, sf_dir)["embeddings"])
-    nkey = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    n = _N_CACHE.get(nkey)
-    if n is None:  # column-pruned count, once per (session, corpus)
-        n = e.count()
-        _N_CACHE[nkey] = n
-    n_cells = max(8, min(4096, (2 * n) // 512))
-    centroids, _ = ivf_index(spark, sf_dir, n_cells=n_cells)  # cached fit
-    # persist the multi-assigned frame per session (round 11): it
-    # feeds BOTH sides of the cell self-join, so the centroid-literal
-    # assignment expressions previously executed twice per call
-    # (expression-id drift defeats ReuseExchange); this is the
-    # bucketed-by-cell table the docstring's 100 TB note describes
-    assigned = _SEMDEDUP_ASSIGN_CACHE.get(nkey)
-    if assigned is None:
-        assigned = ivf_multi_assign(e, centroids, m=2).persist()
-        _SEMDEDUP_ASSIGN_CACHE[nkey] = assigned
+    assigned = _semdedup_assigned(spark, sf_dir)
     a = assigned.select(
         F.col("cell"),
         F.col("vec_id").alias("vec_a"), F.col("vec").alias("avec"),
@@ -1206,21 +1188,12 @@ def ann_ivfpq_cosine(spark, sf_dir):
     )
 
 
-# PQ codebooks cached per (session, corpus) — same serve-many
+# PQ codebooks memoized per (session, corpus) — same serve-many
 # discipline as the IVF cell layout they compose with.
-_PQ_CACHE: dict = {}
-
-
+@per_corpus
 def _pq_books(spark, sf_dir, n_sub: int = 8, n_bits: int = 6, seed: int = 42):
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), n_sub, n_bits, seed)
-    hit = _PQ_CACHE.get(key)
-    if hit is None:
-        e = with_unit_vectors(load_tables(spark, sf_dir)["embeddings"])
-        hit = fit_pq_codebooks(e, n_sub=n_sub, n_bits=n_bits, seed=seed)
-        _PQ_CACHE[key] = hit
-    return hit
+    e = with_unit_vectors(load_tables(spark, sf_dir)["embeddings"])
+    return fit_pq_codebooks(e, n_sub=n_sub, n_bits=n_bits, seed=seed)
 
 
 # Learned-codebook coded corpus persisted per (session, corpus) —
@@ -1233,25 +1206,16 @@ def _pq_books(spark, sf_dir, n_sub: int = 8, n_bits: int = 6, seed: int = 42):
 # jobs each — plan overhead, not data). The cached frame is the coded
 # table `pq_encode`'s docstring names as what a 100 TB deployment
 # persists: vec/norm/cell plus pq_code, recon and its norm.
-_PQ_CODED_LEARNED_CACHE: dict = {}
-
-
+@per_corpus
 def _pq_coded(spark, sf_dir):
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    hit = _PQ_CODED_LEARNED_CACHE.get(key)
-    if hit is None:
-        _, assigned = ivf_index(spark, sf_dir, n_cells=16)
-        books = _pq_books(spark, sf_dir)
-        hit = (
-            pq_encode(assigned, books)
-            .withColumn("recon", pq_reconstruct_expr(books))
-            .withColumn("rnorm", F.expr(_NORM.format(a="recon")))
-            .persist()
-        )
-        _PQ_CODED_LEARNED_CACHE[key] = hit
-    return hit
+    _, assigned = ivf_index(spark, sf_dir, n_cells=16)
+    books = _pq_books(spark, sf_dir)
+    return (
+        pq_encode(assigned, books)
+        .withColumn("recon", pq_reconstruct_expr(books))
+        .withColumn("rnorm", F.expr(_NORM.format(a="recon")))
+        .persist()
+    )
 
 
 @query(
@@ -1301,8 +1265,6 @@ PQP_K = 16  # codewords per subspace -> 4-bit sub-codes, 32-bit packed
 _PQP_SUB_D = PQP_DIM // PQP_NSUB
 _PQP_BITS = (PQP_K - 1).bit_length()
 
-_PQP_CACHE: dict = {}
-
 # Portable coded corpus persisted per (session, corpus) — round 11.
 # The four portable ANN/PQ twins each re-ran the encode chain
 # (8 subspaces × 16 codewords × 8-dim folds per row, plus the 16-center
@@ -1315,11 +1277,9 @@ _PQP_CACHE: dict = {}
 # (vec_id, vec, norm, cell, pq_code, recon, rnorm — assignment + code
 # + reconstruction + its norm), built once per session and charged in
 # bench.py's cache_warm_pre_pass like the other index builds.
-_PQP_CODED_CACHE: dict = {}
-
-
+@per_corpus
 def _pqp_coded(spark, sf_dir):
-    """The portable-codebook coded corpus (see ``_PQP_CODED_CACHE``).
+    """The portable-codebook coded corpus (see the comment above).
 
     Columns beyond ``with_unit_vectors``: ``cell`` (argmin distance to
     the 16 md5-ranked centers — ``assign_cells``), ``pq_code`` (packed
@@ -1328,51 +1288,38 @@ def _pqp_coded(spark, sf_dir):
     consumer queries previously evaluated inline, so every consumer's
     output is bit-identical by construction (re-verified by oracle
     hash)."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    hit = _PQP_CODED_CACHE.get(key)
-    if hit is None:
-        books = _pq_books_portable(spark, sf_dir)
-        centers = [
-            [x for s in range(PQP_NSUB) for x in books[s][j]] for j in range(PQP_K)
-        ]
-        e = with_unit_vectors(load_tables(spark, sf_dir)["embeddings"])
-        hit = (
-            pq_encode(assign_cells(e, centers), books)
-            .withColumn("recon", pq_reconstruct_expr(books))
-            .withColumn("rnorm", F.expr(_NORM.format(a="recon")))
-            .persist()
-        )
-        _PQP_CODED_CACHE[key] = hit
-    return hit
+    books = _pq_books_portable(spark, sf_dir)
+    centers = [
+        [x for s in range(PQP_NSUB) for x in books[s][j]] for j in range(PQP_K)
+    ]
+    e = with_unit_vectors(load_tables(spark, sf_dir)["embeddings"])
+    return (
+        pq_encode(assign_cells(e, centers), books)
+        .withColumn("recon", pq_reconstruct_expr(books))
+        .withColumn("rnorm", F.expr(_NORM.format(a="recon")))
+        .persist()
+    )
 
 
+@per_corpus
 def _pq_books_portable(spark, sf_dir):
     """Deterministic codebooks: rank the corpus by
     ``md5(cast(vec_id as string))`` (ties by vec_id), take the first
     PQP_K vectors, slice each into PQP_NSUB contiguous blocks.
     ``orderBy().limit(k)`` plans as TakeOrderedAndProject — no full
     sort — and the driver pull is k vectors of d doubles (bounded by
-    construction). Cached per (session, corpus) like ``_pq_books``."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    hit = _PQP_CACHE.get(key)
-    if hit is None:
-        e = with_unit_vectors(load_tables(spark, sf_dir)["embeddings"])
-        rows = (
-            e.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-            .limit(PQP_K)
-            .select("vec")
-            .collect()
-        )
-        hit = [
-            [list(r["vec"][s * _PQP_SUB_D : (s + 1) * _PQP_SUB_D]) for r in rows]
-            for s in range(PQP_NSUB)
-        ]
-        _PQP_CACHE[key] = hit
-    return hit
+    construction). Memoized per (session, corpus) like ``_pq_books``."""
+    e = with_unit_vectors(load_tables(spark, sf_dir)["embeddings"])
+    rows = (
+        e.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+        .limit(PQP_K)
+        .select("vec")
+        .collect()
+    )
+    return [
+        [list(r["vec"][s * _PQP_SUB_D : (s + 1) * _PQP_SUB_D]) for r in rows]
+        for s in range(PQP_NSUB)
+    ]
 
 
 # Shared oracle head: double-cast vectors, md5-ranked codebook,
@@ -1866,8 +1813,6 @@ def power_iteration_top_component(
     if it were orthogonal to the top component (measure-zero),
     convergence would stall — n_iter is generous for the tested
     clouds and the parity test asserts alignment with numpy."""
-    import math
-
     mu_row = (
         e.select(F.posexplode("vec").alias("j", "x"))
         .groupBy("j")

@@ -246,13 +246,14 @@ def t3_session_windows(spark, sf_dir):
     tests/test_streaming.py."""
     t = load_tables(spark, sf_dir)
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
+    # exact microsecond gap, as the oracle's interval compare
+    gap = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
     sessionized = (
         t["events"]
         .select("user_id", "ts", "event_id")
         .withColumn(
             "new_session",
-            F.when(gap.isNull() | (gap > 30 * 60), 1).otherwise(0),
+            F.when(gap.isNull() | (gap > 30 * 60 * 1_000_000), 1).otherwise(0),
         )
         .withColumn(
             "session_id",

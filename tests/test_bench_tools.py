@@ -1,7 +1,6 @@
 """Pins for bench.py's round-over-round comparison source selection
 (_prev_bench): prefer the full per-query archives, fall back to
-parseable driver records, salvage tail-truncated ones, skip crash
-records. No SparkSession involved."""
+parseable driver records, skip crash records. No SparkSession involved."""
 import json
 import sys
 
@@ -60,18 +59,6 @@ def test_crash_records_walked_past(tmp_path):
     )
     name, data = bench._prev_bench(str(tmp_path))
     assert name == "BENCH_r01.json"
-
-
-def test_truncated_tail_salvaged(tmp_path):
-    pairs = ", ".join(f'"q{i}": 0.{i+1}' for i in range(12))
-    _write(
-        tmp_path,
-        "BENCH_r03.json",
-        {"rc": 0, "parsed": None, "tail": "...total_sec, {" + pairs + '}, "sf": 0.1}'},
-    )
-    name, data = bench._prev_bench(str(tmp_path))
-    assert name == "BENCH_r03.json (salvaged)"
-    assert data["queries"]["q0"] == 0.1
 
 
 def test_nothing_usable(tmp_path):

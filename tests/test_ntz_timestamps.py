@@ -410,3 +410,24 @@ def test_events_ab_test_report_detects_synthetic_effect(spark, tmp_path):
     assert r["n_t"] + r["n_c"] == 400
     assert r["cr_treatment"] > 0.7 and r["cr_control"] < 0.3
     assert r["z_score"] > 5.0
+
+
+def test_t3_session_windows_subsecond_gap(spark, tmp_path):
+    """A gap of 30 min + 0.5 s opens a new session: the gap compare
+    is exact in microseconds, as in the oracle's interval compare
+    (whole-second casts truncated it to exactly 30 min, one session)."""
+    import datetime as dt
+
+    from elastic_freight_spark import registry
+
+    registry.load_all()
+    t0 = dt.datetime(2024, 1, 1)
+    gap = dt.timedelta(minutes=30, milliseconds=500)
+    sf = str(tmp_path)
+    spark.createDataFrame(
+        [(1, t0, 7, "view", 1.0, "{}"), (2, t0 + gap, 7, "view", 1.0, "{}")],
+        "event_id long, ts timestamp, user_id long, event_type string,"
+        " value double, props string",
+    ).coalesce(1).write.parquet(f"{sf}/events.parquet")
+    rows = registry.QUERIES["t3_session_windows"](spark, sf).collect()
+    assert len(rows) == 2

@@ -346,11 +346,7 @@ def test_pq_coded_and_semdedup_assign_caches_serve_many(spark):
     assert diff == 0
 
     vectors.semdedup_ivf_cells(spark, sf).count()
-    nkey = (
-        spark.sparkContext.applicationId,
-        __import__("os").path.abspath(sf),
-    )
-    a1 = vectors._SEMDEDUP_ASSIGN_CACHE.get(nkey)
-    assert a1 is not None and a1.storageLevel.useMemory
+    a1 = vectors._semdedup_assigned(spark, sf)
+    assert a1.storageLevel.useMemory
     vectors.semdedup_ivf_cells(spark, sf).count()
-    assert vectors._SEMDEDUP_ASSIGN_CACHE.get(nkey) is a1
+    assert vectors._semdedup_assigned(spark, sf) is a1

@@ -15,9 +15,12 @@
    codebook-literal single-reference property it exists for.
 3. `_dlit` (expr-string double literals): exact IEEE round-trip on
    adversarial values (shortest-repr forms, tiny/huge magnitudes,
-   negative zero) and type equality with F.lit's nested form.
+   negative zero) and type equality with F.lit's nested form; NaN and
+   ±inf raise instead of reaching Spark's parser.
 """
 import sys
+
+import pytest
 
 sys.path.insert(0, "/root/repo")
 
@@ -100,3 +103,11 @@ def test_dlit_round_trip_and_type(spark):
     out = df.collect()[0]["a"]
     for want, got in zip([x for r in vals for x in r], [x for r in out for x in r]):
         assert struct.pack("<d", want) == struct.pack("<d", got), (want, got)
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_dlit_rejects_non_finite(bad):
+    from elastic_freight_spark.operators.vectors import _dlit
+
+    with pytest.raises(ValueError, match="non-finite codebook value"):
+        _dlit([[0.0, bad]])

@@ -421,7 +421,6 @@ def test_pq_portable_twins_certify_machinery(spark):
     (test above)."""
     from elastic_freight_spark import registry
     from elastic_freight_spark.operators.vectors import (
-        _PQP_CACHE,
         PQP_K,
         PQP_NSUB,
         _pq_books_portable,
@@ -430,7 +429,7 @@ def test_pq_portable_twins_certify_machinery(spark):
     registry.load_all()
     sf = "/root/testdata/sf0.01"
     books = _pq_books_portable(spark, sf)
-    _PQP_CACHE.clear()
+    _pq_books_portable.release(spark, sf)
     books2 = _pq_books_portable(spark, sf)
     assert books == books2  # md5-rank selection is deterministic
     assert len(books) == PQP_NSUB and all(len(b) == PQP_K for b in books)

@@ -4,9 +4,9 @@ Round-12 instrumentation for the r11 verdict's open question: the
 driver's r11 bench total regressed 11% with a flat CPU canary, and one
 candidate cause was the ~12 new `.persist()` frames squeezing
 execution memory in the single local JVM. This tool runs bench.py's
-exact warm pre-pass (every serve-many cache build), then dumps each
-cached RDD's name, partition count and memory/disk size from
-`sc.getRDDStorageInfo()`, plus the storage-memory ceiling, so the
+exact warm pre-pass (``session.warm_per_corpus``) plus the learned-PQ
+build it leaves out, then dumps each cached RDD's name, partition
+count and memory/disk size from `sc.getRDDStorageInfo()`, plus the storage-memory ceiling, so the
 "storage pressure" hypothesis is a number instead of a guess.
 
 Usage:
@@ -24,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from elastic_freight_spark.session import get_spark, load_tables
+    from elastic_freight_spark.session import get_spark, load_tables, warm_per_corpus
 
     spark = get_spark(
         app_name="efs_storage_footprint",
@@ -32,58 +32,14 @@ def main() -> None:
     )
     load_tables(spark, sf_dir)["lineitem"].count()
 
-    # every serve-many cache build (a superset of bench.py's warm
-    # pre-pass since r12 trimmed the learned-PQ chain there: this tool
-    # measures the full persisted footprint a whole-registry session
-    # can reach, not just what the bench charges)
-    from concurrent.futures import ThreadPoolExecutor
+    # every serve-many cache build: the bench warm pass plus the
+    # learned-PQ chain it leaves out (this tool measures the full
+    # persisted footprint a whole-registry session can reach, not just
+    # what the bench charges)
+    from elastic_freight_spark.operators import vectors
 
-    from elastic_freight_spark.operators import graph, search, text, vectors
-
-    def _chain(*fns):
-        def run():
-            for fn in fns:
-                fn()
-
-        return run
-
-    def _text_chain():
-        text.shingle_sets(spark, sf_dir).count()
-
-        def _lsh_chain():
-            text.minhash_signatures(spark, sf_dir).count()
-            text.lsh_verified_pairs(spark, sf_dir).count()
-
-        deps = [
-            lambda: text.capped_pair_intersections(spark, sf_dir).count(),
-            _lsh_chain,
-            lambda: text.portable_minhash_signatures(spark, sf_dir).count(),
-        ]
-        with ThreadPoolExecutor(max_workers=3) as p2:
-            for _ in p2.map(lambda fn: fn(), deps):
-                pass
-
-    warm_chains = [
-        _chain(lambda: graph.cosupply_edges(spark, sf_dir).count()),
-        _text_chain,
-        _chain(
-            lambda: [d.count() for d in search.indexed_postings(spark, sf_dir)],
-            lambda: search.token_df(spark, sf_dir).count(),
-        ),
-        _chain(
-            lambda: vectors._pq_books_portable(spark, sf_dir),
-            lambda: vectors._pqp_coded(spark, sf_dir).count(),
-        ),
-        _chain(
-            lambda: vectors.ivf_index(spark, sf_dir)[1].count(),
-            lambda: vectors._pq_books(spark, sf_dir),
-            lambda: vectors._pq_coded(spark, sf_dir).count(),
-        ),
-        _chain(lambda: vectors.lsh_index(spark, sf_dir).count()),
-    ]
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        for _ in pool.map(lambda fn: fn(), warm_chains):
-            pass
+    warm_per_corpus(spark, sf_dir)
+    vectors._pq_coded(spark, sf_dir).count()
 
     jsc = spark.sparkContext._jsc.sc()
     infos = jsc.getRDDStorageInfo()
