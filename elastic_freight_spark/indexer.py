@@ -1047,7 +1047,7 @@ def read_index_changes(
     """CDC read over the upsert log (Delta's ``table_changes``): every
     upsert/delete row with ``from_version < _version <= to_version``,
     exposing the op column — the incremental-consumer API that lets a
-    downstream index (or a streaming admission gate) sync WITHOUT
+    downstream index sync WITHOUT
     rescanning the base. The version fence filters on the raw column
     so parquet row-group stats skip out-of-range delta files
     entirely; base rows (NULL version) are never change rows."""

@@ -818,34 +818,13 @@ CMS_HEX_CHARS = 2  # bucket id = first 2 md5 hex chars -> width w = 256
 
 def cms_bucket(key_col: Column, r_col: Column) -> Column:
     """The ONE Count-Min bucket definition every consumer (batch
-    queries, streaming maintenance, oracles via the same formula in
-    SQL) must share: first CMS_HEX_CHARS hex chars of
-    ``md5('<r>:' || key)`` — a 256-way string partition of hex space,
-    no hex→int conversion anywhere."""
+    queries, oracles via the same formula in SQL) must share: first
+    CMS_HEX_CHARS hex chars of ``md5('<r>:' || key)`` — a 256-way
+    string partition of hex space, no hex→int conversion anywhere."""
     return F.substring(
         F.md5(F.concat(r_col.cast("string"), F.lit(":"), key_col.cast("string"))),
         1,
         CMS_HEX_CHARS,
-    )
-
-
-def cms_cells(df: DataFrame, key_col: str) -> DataFrame:
-    """Fold a keyed frame into its d×w Count-Min grid: one map-side-
-    combinable aggregate to per-key counts, then a w-bounded explode
-    to (r, bucket, cell_n). The output is at most CMS_ROWS×256 rows
-    regardless of input size — the shippable sketch."""
-    keys = df.groupBy(F.col(key_col).alias("_k")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    return (
-        keys.select(
-            "_k",
-            "n",
-            F.explode(F.array(*[F.lit(r) for r in range(CMS_ROWS)])).alias("r"),
-        )
-        .withColumn("bucket", cms_bucket(F.col("_k"), F.col("r")))
-        .groupBy("r", "bucket")
-        .agg(F.sum("n").alias("cell_n"))
     )
 
 

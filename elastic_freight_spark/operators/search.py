@@ -1318,9 +1318,9 @@ _PERCOLATE_SQL_VALUES = ", ".join(
 
 def percolate_matches(docs, stored, qsize):
     """(query_id, doc_id) matches of documents against the stored
-    must-term queries — the per-document match core shared by the
-    batch report and the streaming alerter (percolation is local to a
-    document, so the SAME plan runs per micro-batch unchanged)."""
+    must-term queries — the per-document match core of the percolate
+    report (percolation is local to a document, so the plan never
+    joins documents with each other)."""
     doc_terms = (
         docs.select(
             "doc_id",

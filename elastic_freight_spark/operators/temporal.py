@@ -2160,9 +2160,7 @@ def t_theil_sen_trend(spark, sf_dir):
     )
 
 
-# Channel mapping shared by the batch attribution query and its
-# streaming twin (streaming/structured.stream_attribution_state):
-# ONE definition so the two surfaces can never diverge.
+# Channel mapping of the attribution queries: props.k mod 4 → name.
 ATTRIBUTION_CHANNELS = {0: "organic", 1: "paid", 2: "email", 3: "social"}
 
 

@@ -1734,7 +1734,7 @@ def doc_spans(docs, extra_cols=()):
     spans of each document, built row-locally with JVM higher-order
     functions (split → sequence → transform(slice)): nothing
     token-level ever reaches a shuffle. Shared by the span-dedup
-    family (corpus report, incremental gate, streaming admission)."""
+    family (corpus report, incremental gate)."""
     span_expr = F.expr(
         "CASE WHEN size(toks) >= 10 THEN "
         "  transform(sequence(1, size(toks) div 10), "

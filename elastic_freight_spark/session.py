@@ -151,6 +151,12 @@ def per_corpus(builder):
         k = key(spark, sf_dir, *args, **kwargs)
         hit = _MEMO.get(k)
         if hit is None:
+            # one SparkContext per JVM: an entry of another applicationId
+            # belongs to a stopped session and can never hit. Forget it
+            # (unpersist on a stopped context can raise); misses only, so
+            # the hit path stays one dict lookup.
+            for stale in [m for m in list(_MEMO) if m[1] != k[1]]:
+                _MEMO.pop(stale, None)
             built = builder(spark, sf_dir, *args, **kwargs)
             # two threads racing on one key both build; the first
             # store wins and the loser's frames are dropped

@@ -3,15 +3,8 @@ from elastic_freight_spark.streaming.structured import (
     enrich_stream,
     finalize_stream_index,
     read_parquet_stream,
-    serve_countmin_estimate,
-    serve_kmv_distinct,
-    serve_topk,
     session_agg,
-    stream_countmin_cells,
-    stream_interval_join,
-    stream_kmv_minima,
     stream_index,
-    stream_topk_counts,
     stream_upsert_index,
     tumbling_agg,
     user_running_state,
@@ -27,11 +20,4 @@ __all__ = [
     "dedup_stream",
     "enrich_stream",
     "user_running_state",
-    "stream_topk_counts",
-    "serve_topk",
-    "stream_countmin_cells",
-    "serve_countmin_estimate",
-    "stream_kmv_minima",
-    "stream_interval_join",
-    "serve_kmv_distinct",
 ]

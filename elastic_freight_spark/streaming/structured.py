@@ -1,6 +1,16 @@
 """Streaming tier (SURVEY.md §2.10 T1-T5): Structured Streaming over
 the ``events`` stream, reusing the batch engine per micro-batch.
 
+The scope is T1-T5 and no more: T1 micro-batch ingest into the
+sharded index (:func:`stream_index` + :func:`finalize_stream_index`,
+and the upsert twin :func:`stream_upsert_index`), T2 tumbling/sliding
+windows (:func:`tumbling_agg`), T3 session windows
+(:func:`session_agg`), T4 watermarks (the ``watermark`` argument of
+each) and T5 stateful dedup (:func:`dedup_stream`). Around them sit
+stream-static enrichment, the gated Kafka source, and
+:func:`user_running_state`, kept as the one ``applyInPandasWithState``
+(custom stateful operator) example COVERAGE §2.11 lists.
+
 The reference is a batch rebuild job — the entire index is rebuilt per
 run (snapshot repo names "unique across rebuilds",
 job/BaseESReducer.java:70-71); its only "incremental" machinery is the
@@ -46,7 +56,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
 from elastic_freight_spark.indexer import IndexConfig, shard_expr
-from elastic_freight_spark.operators.temporal import ATTRIBUTION_CHANNELS
 
 # Ship this module's functions (the applyInPandasWithState handler) to
 # Python workers by VALUE — executors must not need the package
@@ -397,911 +406,4 @@ def stream_upsert_index(
         writer = writer.trigger(availableNow=True)
     elif processing_time:
         writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
-
-
-def user_running_state_v2(events: DataFrame) -> DataFrame:
-    """The same running-totals operator on the Spark 4
-    ``transformWithStateInPandas`` API (StatefulProcessor) — the
-    successor to ``applyInPandasWithState`` with named state
-    variables, TTL, and timers, and the surface new stateful
-    operators should target.
-
-    Gated: the API's Python state-server protocol needs the
-    ``protobuf`` package, which is not deployed in every environment
-    (this container lacks it) — probe and fail with the deploy hint
-    rather than a mid-query worker crash. It also requires the
-    RocksDB state store
-    (``spark.sql.streaming.stateStore.providerClass`` — already the
-    cluster recommendation in ``session.cluster_conf``)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise RuntimeError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "for its state-server protocol (pip install protobuf); it is "
-            "not deployed in this session — use user_running_state "
-            "(applyInPandasWithState) instead"
-        ) from exc
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n_events long, sum_value double"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            if self._totals.exists():
-                n, total = self._totals.get()
-            else:
-                n, total = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunningTotals(),
-        outputStructType=_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def stream_admission_gate(
-    stream_docs: DataFrame,
-    span_index_path: str,
-    accepted_path: str,
-    checkpoint_dir: str,
-    threshold: float = 0.5,
-    available_now: bool = False,
-):
-    """Continuous-ingestion admission control: the streaming face of
-    ``operators.text.dedup_incremental_gate``. Every micro-batch of
-    documents is span-gated against a *persistent* span index — a
-    batch document is rejected when ≥``threshold`` of its 10-token
-    spans were already accepted in ANY earlier batch — then accepted
-    docs land in ``accepted_path`` and their spans are appended to
-    the index, so later batches see them.
-
-    This is the reference's "unique across rebuilds" manifest
-    discipline (BaseESReducer.java:70-71) upgraded to content
-    granularity: the span index is the state the pipeline keeps
-    between runs, exactly like a snapshot manifest, and it lives as
-    plain parquet — readable, compactable, replayable — instead of a
-    streaming state store (which would re-shuffle the whole index
-    into executor state every restart).
-
-    foreachBatch is what makes the index JOIN-able per batch (a
-    stateful streaming agg cannot join against its own prior output).
-    foreachBatch delivery is at-least-once, so the gate is made
-    idempotent the standard way: a ``_batch_<id>.done`` marker in the
-    accepted dir — a replayed batch whose marker exists is skipped
-    entirely, so neither the accepted output nor the span index ever
-    double-counts a batch.
-    """
-    from pyspark.sql import functions as F
-
-    from elastic_freight_spark.operators.text import doc_spans
-
-    def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        marker = os.path.join(accepted_path, f"_batch_{batch_id}.done")
-        if os.path.exists(marker):  # replay of a committed batch
-            return
-        spans = doc_spans(batch_df).persist()
-        # Probe for the index explicitly: a missing directory is the
-        # only legitimate "first batch, no state yet" case. A genuine
-        # read failure (corrupt files, permissions, transient FS error)
-        # must propagate — swallowing it would admit the entire batch
-        # unchecked and poison the span index.
-        has_index = os.path.isdir(span_index_path) and any(
-            not name.startswith((".", "_")) for name in os.listdir(span_index_path)
-        )
-        if has_index:
-            idx = spark.read.parquet(span_index_path).select(
-                "span_text"
-            ).distinct()
-            seen = spans.join(
-                idx.withColumn("_seen", F.lit(1)), "span_text", "left"
-            ).select("doc_id", F.coalesce("_seen", F.lit(0)).alias("seen"))
-        else:
-            seen = spans.select(
-                "doc_id", F.lit(0).alias("seen")
-            )
-        verdict = seen.groupBy("doc_id").agg(
-            (
-                F.sum("seen") / F.count(F.lit(1)).cast("double") >= threshold
-            ).alias("reject")
-        )
-        rejected = verdict.filter(F.col("reject")).select("doc_id")
-        # Anti-join against REJECTED ids, not semi-join against accepted
-        # ones: a document shorter than one span emits zero span rows,
-        # hence no verdict row at all — it must default to ACCEPT. A
-        # semi-join on accepted ids silently drops such docs from both
-        # the output and the index.
-        accepted = batch_df.join(rejected, "doc_id", "anti")
-        accepted.withColumn("_batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(accepted_path)
-        spans.join(
-            rejected, "doc_id", "anti"
-        ).select("span_text").write.mode("append").parquet(span_index_path)
-        spans.unpersist()
-        # marker LAST: a crash before this point replays the batch
-        # (both writes re-run; the accepted dir may then hold dup rows
-        # from the partial attempt, which readers drop by the
-        # (_batch_id, doc_id) key); after it, replay is a no-op
-        with open(marker, "w") as f:
-            f.write("done")
-
-    writer = stream_docs.writeStream.foreachBatch(_gate).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_drift_alarm(
-    stream_docs: DataFrame,
-    ref_tf_path: str,
-    alarm_path: str,
-    checkpoint_dir: str,
-    kl_threshold: float = 0.5,
-    available_now: bool = False,
-):
-    """Streaming distribution-shift monitor: the per-batch face of
-    ``operators.text.text_source_drift_kl``. Each micro-batch's token
-    distribution is scored with KL(batch ‖ reference) against a
-    persisted reference term-frequency table (built once from the
-    trusted corpus — ``build_reference_tf``); one alarm row per
-    (batch, source) lands in ``alarm_path`` with the KL and a
-    breached flag. Unseen tokens are smoothed into the reference
-    (add-one on the batch side of the join) so KL stays finite when
-    a source drifts vocabulary — which is exactly when you need the
-    alarm to fire, not divide by zero.
-
-    Like the admission gate, the state is a plain parquet artifact a
-    batch job can rebuild, not a streaming state store; the alarm
-    stream is idempotent per batch via the same marker discipline."""
-    from pyspark.sql import functions as F
-
-    def _alarm(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        marker = os.path.join(alarm_path, f"_batch_{batch_id}.done")
-        if os.path.exists(marker):
-            return
-        ref = spark.read.parquet(ref_tf_path)
-        ref_tot = ref.agg(F.sum("n").cast("double").alias("gtotal"))
-        toks = batch_df.select(
-            "source", F.explode(F.split(F.lower("text"), " ")).alias("token")
-        ).filter(F.col("token") != "")
-        src_tf = toks.groupBy("source", "token").agg(
-            F.count(F.lit(1)).alias("bn")
-        )
-        src_tot = src_tf.groupBy("source").agg(F.sum("bn").alias("btotal"))
-        joined = (
-            src_tf.join(ref.withColumnRenamed("n", "rn"), "token", "left")
-            .join(src_tot, "source")
-            .crossJoin(F.broadcast(ref_tot))
-        )
-        p = F.col("bn") / F.col("btotal").cast("double")
-        q = (F.coalesce(F.col("rn"), F.lit(0)) + 1) / (
-            F.col("gtotal") + F.lit(1.0)
-        )
-        report = (
-            joined.groupBy("source", "btotal")
-            .agg(F.round(F.sum(p * F.log(p / q)), 9).alias("kl"))
-            .select(
-                F.lit(batch_id).alias("batch_id"),
-                "source",
-                F.col("btotal").cast("bigint").alias("n_tokens"),
-                "kl",
-                (F.col("kl") > kl_threshold).alias("breached"),
-            )
-        )
-        report.write.mode("append").parquet(alarm_path)
-        with open(marker, "w") as f:
-            f.write("done")
-
-    writer = stream_docs.writeStream.foreachBatch(_alarm).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def build_reference_tf(docs: DataFrame, ref_tf_path: str) -> None:
-    """Materialize the trusted-corpus token frequencies the drift
-    alarm scores against (token, n)."""
-    from pyspark.sql import functions as F
-
-    (
-        docs.select(F.explode(F.split(F.lower("text"), " ")).alias("token"))
-        .filter(F.col("token") != "")
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .write.mode("overwrite")
-        .parquet(ref_tf_path)
-    )
-
-
-def stream_topk_counts(
-    stream_df: DataFrame,
-    key_col: str,
-    counts_path: str,
-    checkpoint_dir: str,
-    available_now: bool = False,
-):
-    """Streaming heavy-hitter maintenance: the continuous face of
-    ``operators.scale.skew_heavy_hitters``. Each micro-batch reduces
-    to per-key PARTIAL counts written with OVERWRITE into its own
-    ``batch=<id>`` partition of a plain-parquet count ledger — a
-    replayed batch (foreachBatch is at-least-once) replaces its own
-    partition rather than double-counting, even on a crash between
-    the write and the skip-marker; ``serve_topk`` merges partials at
-    read time — the same partials-merge contract
-    ``incremental_rollup_merge`` pins for batch. State lives as
-    readable, compactable parquet, not an opaque streaming state
-    store, and per-batch work is |batch-distinct-keys|, never
-    proportional to history.
-
-    NOTE: the ``_batch_<id>.done`` skip markers use driver-local
-    ``os.path``/``open`` and therefore assume ``counts_path`` is on a
-    filesystem the driver can reach directly (local disk, NFS, a
-    fuse-mounted object store). On a plain ``s3a://``/``hdfs://``
-    ledger the markers are silently absent and every replayed batch
-    re-runs its (idempotent, overwrite-mode) write — correct but not
-    skipped. Swap the marker I/O for the Hadoop FileSystem API if
-    cheap skips matter on such deployments."""
-
-    def _count(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        if batch_df.isEmpty():
-            return
-        marker = os.path.join(counts_path, f"_batch_{batch_id}.done")
-        if os.path.exists(marker):  # committed: skip the rework
-            return
-        # idempotency by construction, not by marker: each batch
-        # OVERWRITES its own batch=<id> subdirectory, so a replay
-        # after a crash between write and marker replaces its partial
-        # partition instead of appending a duplicate. The marker is
-        # only the cheap skip. (As with every foreachBatch state dir
-        # here, counts_path is tied to ONE checkpoint lineage —
-        # restarting with a fresh checkpoint over a used counts_path
-        # restarts batch ids at 0 and is user error.)
-        (
-            batch_df.groupBy(F.col(key_col).alias("key"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(counts_path, f"batch={batch_id}"))
-        )
-        with open(marker, "w") as f:
-            f.write("done")
-
-    writer = stream_df.writeStream.foreachBatch(_count).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def serve_topk(
-    spark: SparkSession, counts_path: str, k: int = 10, key_type: str = "long"
-) -> DataFrame:
-    """Top-k keys from the streaming count ledger: merge the partial
-    counts (one key-sized aggregate over the ledger — facts are never
-    rescanned) with the deterministic (count desc, key) tie-break the
-    batch heavy-hitter query uses.
-
-    ``key_type`` types the empty frame returned before any batch has
-    committed — ``stream_topk_counts`` is generic over ``key_col``,
-    so a string-keyed stream must pass ``key_type="string"`` to get a
-    consistently-typed result in the empty case. Once a batch exists
-    the schema comes from the parquet ledger itself and the argument
-    is ignored."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    dirs = sorted(glob.glob(os.path.join(counts_path, "batch=*")))
-    if not dirs:  # stream started, nothing committed yet: empty top-k
-        return spark.createDataFrame([], f"key {key_type}, n long")
-    partials = spark.read.parquet(*dirs)
-    return (
-        partials.groupBy("key")
-        .agg(F.sum("n").cast("bigint").alias("n"))
-        .orderBy(F.col("n").desc(), "key")
-        .limit(k)
-    )
-
-
-_FUNNEL_STATE_SCHEMA = "t1 LONG, t2 LONG, t3 LONG"
-_FUNNEL_OUT_SCHEMA = (
-    "user_id LONG, stage INT, t1_us LONG, t2_us LONG, t3_us LONG"
-)
-_FUNNEL_WEEK_US = 7 * 86_400 * 1_000_000
-
-
-def _funnel_user_fn(key, pdfs, state):
-    """Per-user funnel stage machine (view → click → purchase, each
-    stage within 7 days of the previous stage's FIRST qualifying
-    event — `operators.temporal._funnel_stages` semantics, applied
-    one event at a time in timestamp order). State is the three
-    first-qualifying timestamps (0 = not reached); processing events
-    in ts order makes "first qualifying" ≡ "min qualifying", so the
-    converged state equals the batch definition exactly."""
-    import pandas as pd
-
-    t1, t2, t3 = state.get if state.exists else (0, 0, 0)
-    rows = pd.concat(list(pdfs), ignore_index=True)
-    # normalize to microseconds explicitly — plain astype(int64)
-    # depends on the Arrow->pandas datetime unit (ns today, us under
-    # future pandas defaults) and would silently mis-scale the window
-    rows["ts_us"] = rows["ts"].astype("datetime64[us]").astype("int64")
-    rows = rows.sort_values("ts_us")
-    for etype, ts in zip(rows["event_type"], rows["ts_us"]):
-        if t1 == 0:
-            if etype == "view":
-                t1 = ts
-        elif t2 == 0:
-            if etype == "click" and t1 < ts <= t1 + _FUNNEL_WEEK_US:
-                t2 = ts
-        elif t3 == 0:
-            if etype == "purchase" and t2 < ts <= t2 + _FUNNEL_WEEK_US:
-                t3 = ts
-    state.update((t1, t2, t3))
-    stage = 3 if t3 else (2 if t2 else (1 if t1 else 0))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "stage": [stage],
-            "t1_us": [t1],
-            "t2_us": [t2],
-            "t3_us": [t3],
-        }
-    )
-
-
-def stream_funnel_state(events: DataFrame) -> DataFrame:
-    """Continuous funnel tracking via ``applyInPandasWithState``: each
-    user carries a tiny (t1, t2, t3) state tuple, every micro-batch
-    advances the stage machine over its (ts-sorted) events and emits
-    the user's current stage — live funnel dashboards without
-    re-scanning history (per-batch work is batch-sized; state is
-    3 longs per user). Converges to the batch funnel EXACTLY when
-    events arrive time-ordered across batches (the kafka/file-source
-    norm); the differential test pins stream ≡ batch on a
-    time-bucketed source."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _funnel_user_fn,
-        outputStructType=_FUNNEL_OUT_SCHEMA,
-        stateStructType=_FUNNEL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stream_countmin_cells(
-    stream_df: DataFrame,
-    key_col: str,
-    cells_path: str,
-    checkpoint_dir: str,
-    available_now: bool = False,
-):
-    """Streaming Count-Min maintenance: fold each micro-batch into its
-    own d×w cell grid (``operators.scale.cms_cells`` — the ONE bucket
-    definition shared with the batch sketch queries) and write it as
-    ``batch=<id>`` parquet, the same overwrite-idempotent ledger
-    discipline as ``stream_topk_counts``. Because CMS cells are
-    ADDITIVE (``sketch_countmin_merge`` is the hash-verified receipt),
-    serving merges grids with one SUM over ≤ batches×d×w rows —
-    per-batch state is CONSTANT-SIZED (≤ d×w = 1024 rows) no matter
-    how many distinct keys a batch carries, which is the whole reason
-    to stream a sketch instead of the key space. Same local-FS marker
-    assumption as the other foreachBatch ledgers here."""
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        from elastic_freight_spark.operators.scale import cms_cells
-
-        if batch_df.isEmpty():
-            return
-        marker = os.path.join(cells_path, f"_batch_{batch_id}.done")
-        if os.path.exists(marker):
-            return
-        (
-            cms_cells(batch_df, key_col)
-            .write.mode("overwrite")
-            .parquet(os.path.join(cells_path, f"batch={batch_id}"))
-        )
-        with open(marker, "w") as f:
-            f.write("done")
-
-    writer = stream_df.writeStream.foreachBatch(_fold).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def serve_countmin_estimate(
-    spark: SparkSession, cells_path: str, keys_df: DataFrame, key_col: str
-) -> DataFrame:
-    """Point estimates from the streamed sketch ledger: SUM the
-    per-batch grids into one d×w grid (sketch mergeability), hash the
-    probe keys with the shared bucket definition, and take the
-    integer MIN over the d cells — a missing cell counts as 0 (the
-    key was never seen), never skipped, so unseen keys estimate 0
-    instead of borrowing a collided cell's mass."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from elastic_freight_spark.operators.scale import CMS_ROWS, cms_bucket
-
-    probes = keys_df.select(F.col(key_col).alias("key"))
-    dirs = sorted(glob.glob(os.path.join(cells_path, "batch=*")))
-    if not dirs:  # nothing committed yet: every estimate is 0
-        return probes.withColumn("est_n", F.lit(0).cast("bigint"))
-    cells = (
-        spark.read.parquet(*dirs)
-        .groupBy("r", "bucket")
-        .agg(F.sum("cell_n").alias("cell_n"))
-    )
-    hashed = probes.withColumn(
-        "r", F.explode(F.array(*[F.lit(r) for r in range(CMS_ROWS)]))
-    ).withColumn("bucket", cms_bucket(F.col("key"), F.col("r")))
-    return (
-        hashed.join(F.broadcast(cells), ["r", "bucket"], "left")
-        .groupBy("key")
-        .agg(
-            F.min(F.coalesce(F.col("cell_n"), F.lit(0)))
-            .cast("bigint")
-            .alias("est_n")
-        )
-    )
-
-
-def stream_kmv_minima(
-    stream_df: DataFrame,
-    key_col: str,
-    minima_path: str,
-    checkpoint_dir: str,
-    available_now: bool = False,
-):
-    """Streaming KMV distinct-sketch maintenance: fold each
-    micro-batch to the k smallest ``md5('kmv:' || key)`` hashes of
-    its keys (``operators.scale.kmv_topk`` — the ONE hash definition
-    and salted two-phase ranking shared with the batch
-    ``sketch_kmv_distinct``) and write them as a ``batch=<id>``
-    parquet, the overwrite-idempotent ledger discipline of the other
-    foreachBatch sinks here. KMV merges LOSSLESSLY (the global k
-    minima are minima of every covering sketch — the ``__merged`` ==
-    ``__onepass`` receipt the batch query hash-verifies), so serving
-    ranks the union of per-batch minima; per-batch state is ≤ k rows
-    regardless of batch key cardinality. Same local-FS marker
-    assumption as the other ledgers."""
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        from elastic_freight_spark.operators.scale import KMV_K, kmv_topk
-
-        if batch_df.isEmpty():
-            return
-        marker = os.path.join(minima_path, f"_batch_{batch_id}.done")
-        if os.path.exists(marker):
-            return
-        hashed = batch_df.select(
-            F.md5(
-                F.concat(F.lit("kmv:"), F.col(key_col).cast("string"))
-            ).alias("h")
-        ).distinct()
-        (
-            kmv_topk(hashed, [], KMV_K)
-            .select("h")
-            .write.mode("overwrite")
-            .parquet(os.path.join(minima_path, f"batch={batch_id}"))
-        )
-        with open(marker, "w") as f:
-            f.write("done")
-
-    writer = stream_df.writeStream.foreachBatch(_fold).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def serve_kmv_distinct(spark: SparkSession, minima_path: str) -> DataFrame:
-    """Distinct-count estimate from the streamed KMV ledger: union
-    the per-batch minima, dedup (the same key in two batches hashes
-    identically), rank to the global k smallest, and apply the same
-    estimator as the batch query — with the exact-regime guard: a
-    sketch holding fewer than k hashes has seen EVERY distinct key
-    (each batch ledger keeps all of its ≤ k-1 minima, and the union
-    of complete sets is complete), so the count is exact, not
-    estimated. Returns one row (n_hashes, kth_min, est_distinct)."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from elastic_freight_spark.operators.scale import (
-        _KMV_NUM,
-        KMV_K,
-        kmv_hex_value_sql,
-        kmv_topk,
-    )
-
-    dirs = sorted(glob.glob(os.path.join(minima_path, "batch=*")))
-    if not dirs:  # nothing committed yet
-        return spark.range(1).select(
-            F.lit(0).cast("bigint").alias("n_hashes"),
-            F.lit(None).cast("string").alias("kth_min"),
-            F.lit(0.0).alias("est_distinct"),
-        )
-    minima = spark.read.parquet(*dirs).select("h").distinct()
-    sk = kmv_topk(minima, [], KMV_K)
-    return sk.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hashes"),
-        F.max("h").alias("kth_min"),
-    ).select(
-        "n_hashes",
-        "kth_min",
-        F.when(
-            F.col("n_hashes") < KMV_K, F.col("n_hashes").cast("double")
-        )
-        .otherwise(
-            F.expr(
-                f"{_KMV_NUM}.0"
-                f" / nullif({kmv_hex_value_sql('kth_min')}, 0.0)"
-            )
-        )
-        .alias("est_distinct"),
-    )
-
-
-def stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    right_key: str,
-    left_ts: str,
-    right_ts: str,
-    max_gap_minutes: int = 60,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream INNER interval join — the fully-streaming twin
-    of the batch as-of/interval joins in operators/temporal.py: match
-    right-stream rows to left-stream rows with equal keys whose
-    ``right_ts`` falls in [left_ts, left_ts + max_gap_minutes min].
-    Column names must be DISJOINT across the two streams (rename one
-    side first); the joined frame carries both sides' payloads.
-
-    Both sides carry event-time watermarks, which is what lets Spark
-    BOUND the join state: a buffered left row is dropped once the
-    right watermark passes left_ts + gap (and a right row once the
-    left watermark passes right_ts) — state is (watermark horizon ×
-    arrival rate)-sized, never stream-sized. That bound is the whole
-    design: Spark rejects a stream-stream join whose condition gives
-    no time bound at analysis time, and at 100 TB/day the
-    gap+watermark horizon IS the state-store memory budget.
-    Differential test: equals the identical batch join on a
-    time-chunked file source (tests/test_streaming.py)."""
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
-    cond = (
-        (F.col(left_key) == F.col(right_key))
-        & (F.col(right_ts) >= F.col(left_ts))
-        & (
-            F.col(right_ts)
-            <= F.col(left_ts)
-            + F.expr(f"INTERVAL {int(max_gap_minutes)} MINUTES")
-        )
-    )
-    return lw.join(rw, cond, "inner")
-
-
-# --- streaming interval-union coverage (batch twin: t_interval_coverage) ---
-
-_COVERAGE_STATE_SCHEMA = (
-    "open_start LONG, open_end LONG, n_closed LONG,"
-    " covered_closed LONG, first_start LONG"
-)
-_COVERAGE_OUT_SCHEMA = (
-    "user_id LONG, n_islands INT, covered_us LONG, span_us LONG"
-)
-
-
-def _coverage_user_fn(key, pdfs, state):
-    import pandas as pd
-
-    from elastic_freight_spark.operators.temporal import COVERAGE_WINDOW_US
-
-    if state.exists:
-        open_start, open_end, n_closed, covered_closed, first_start = (
-            state.get
-        )
-    else:
-        open_start = open_end = first_start = None
-        n_closed = covered_closed = 0
-    starts = []
-    for pdf in pdfs:
-        starts.extend(int(v) for v in pdf["s"].tolist())
-    starts.sort()
-    for s in starts:
-        e = s + COVERAGE_WINDOW_US
-        if open_start is None:
-            open_start, open_end, first_start = s, e, s
-        elif s <= open_end:
-            if e > open_end:
-                open_end = e
-        else:
-            n_closed += 1
-            covered_closed += open_end - open_start
-            open_start, open_end = s, e
-    state.update(
-        (open_start, open_end, n_closed, covered_closed, first_start)
-    )
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_islands": [int(n_closed + 1)],
-            "covered_us": [covered_closed + (open_end - open_start)],
-            "span_us": [open_end - first_start],
-        }
-    )
-
-
-def stream_interval_coverage(events: DataFrame) -> DataFrame:
-    """Continuous interval-union activity coverage via
-    ``applyInPandasWithState`` — the streaming twin of
-    ``t_interval_coverage``. Per-user state is 5 longs (the open
-    island plus closed-island totals); each micro-batch merges its
-    (sorted) event times into the open island or closes it, and the
-    emitted row is the user's CURRENT (n_islands, covered_us,
-    span_us) — live "time actually active" without re-scanning
-    history, per-batch work batch-sized. Exactly like the funnel
-    state machine, the fold converges to the batch query when events
-    arrive time-ordered across batches (an event older than the open
-    island's end still merges; one older than its START would need
-    the closed history and is the same limitation every O(1)-state
-    coverage fold has). The differential test pins stream ≡ batch on
-    the 24-chunk in-order source."""
-    return (
-        events.select(
-            "user_id", F.unix_micros("ts").alias("s")
-        )
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _coverage_user_fn,
-            outputStructType=_COVERAGE_OUT_SCHEMA,
-            stateStructType=_COVERAGE_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# --- streaming SCD2 history (batch twin: index_scd2_history) --------------
-
-_SCD2_STATE_SCHEMA = "cur_state STRING, valid_from LONG"
-_SCD2_OUT_SCHEMA = (
-    "user_id LONG, state STRING, valid_from_us LONG, valid_to_us LONG,"
-    " is_current INT"
-)
-
-
-def _scd2_user_fn(key, pdfs, state):
-    import pandas as pd
-
-    if state.exists:
-        cur_state, valid_from = state.get
-    else:
-        cur_state = valid_from = None
-    rows = []
-    events = []
-    for pdf in pdfs:
-        events.extend(
-            (int(s), int(e), str(t))
-            for s, e, t in zip(pdf["s"], pdf["event_id"], pdf["event_type"])
-        )
-    events.sort()
-    out = []
-    for s, _eid, typ in events:
-        if cur_state is None:
-            cur_state, valid_from = typ, s
-        elif typ != cur_state:
-            out.append((cur_state, valid_from, s, 0))  # closed version
-            cur_state, valid_from = typ, s
-    state.update((cur_state, valid_from))
-    out.append((cur_state, valid_from, None, 1))  # open/current version
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]] * len(out),
-            "state": [o[0] for o in out],
-            "valid_from_us": [o[1] for o in out],
-            "valid_to_us": [o[2] for o in out],
-            "is_current": [o[3] for o in out],
-        }
-    )
-
-
-def stream_scd2_history(events: DataFrame) -> DataFrame:
-    """Streaming SCD type-2 maintenance — the CDC face of
-    ``index_scd2_history``: per-user state is just (current_state,
-    valid_from); each micro-batch folds its (sorted) events through
-    the change detector, emits every version CLOSED in this batch
-    (is_current=0, final — safe to append to the history sink) plus
-    the user's refreshed open version (is_current=1, superseded by a
-    later emission). Converges to the batch history exactly when
-    events arrive time-ordered across batches, like every O(1)-state
-    fold here; per-batch work is batch-sized, state is 2 fields per
-    user regardless of history length — the reason to stream SCD2
-    instead of rebuilding it."""
-    return (
-        events.select(
-            "user_id",
-            "event_id",
-            "event_type",
-            F.unix_micros("ts").alias("s"),
-        )
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _scd2_user_fn,
-            outputStructType=_SCD2_OUT_SCHEMA,
-            stateStructType=_SCD2_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-_ATTR_STATE_SCHEMA = "c_ts LONG, c_id LONG, channel STRING"
-_ATTR_OUT_SCHEMA = (
-    "p_id LONG, user_id LONG, channel STRING, value DOUBLE, p_ts_us LONG"
-)
-
-
-def _attribution_user_fn(key, pdfs, state):
-    """Per-user last-touch attribution machine: state is the user's
-    latest click (timestamp µs, event_id, channel — 2 longs + a small
-    string). Each batch attributes its purchases against ALL clicks
-    visible so far (carried state + this batch's clicks, whatever
-    their intra-batch order), exactly the batch query's
-    `c_ts <= p_ts` / latest-(ts, event_id) tie-break; convergence to
-    the batch report needs only time-ordered batches ACROSS triggers
-    (the same source discipline as the funnel machine)."""
-    # ATTRIBUTION_CHANNELS is referenced as a module global so
-    # cloudpickle ships the dict BY VALUE with this function — a
-    # worker-side `from elastic_freight_spark...` import would need
-    # the repo on executor sys.path, which the drive contract
-    # explicitly does not guarantee.
-    import json
-
-    import pandas as pd
-
-    c_ts, c_id, channel = (
-        state.get if state.exists else (0, -1, None)
-    )
-    rows = pd.concat(list(pdfs), ignore_index=True)
-    rows["ts_us"] = rows["ts"].astype("datetime64[us]").astype("int64")
-    clicks = rows[rows["event_type"] == "click"]
-    cand = [(c_ts, c_id, channel)] if channel is not None else []
-    cand += [
-        (
-            int(t),
-            int(i),
-            ATTRIBUTION_CHANNELS[int(json.loads(p)["k"]) % 4],
-        )
-        for t, i, p in zip(
-            clicks["ts_us"], clicks["event_id"], clicks["props"]
-        )
-    ]
-    out = []
-    for _, r in rows[rows["event_type"] == "purchase"].iterrows():
-        prior = [c for c in cand if c[0] <= r["ts_us"]]
-        if prior:
-            best = max(prior)  # latest ts, then largest event_id
-            out.append(
-                (
-                    int(r["event_id"]),
-                    int(key[0]),
-                    best[2],
-                    float(r["value"]),
-                    int(r["ts_us"]),
-                )
-            )
-    if cand:
-        c_ts, c_id, channel = max(cand)
-        state.update((c_ts, c_id, channel))
-    yield pd.DataFrame(
-        out, columns=["p_id", "user_id", "channel", "value", "p_ts_us"]
-    )
-
-
-def stream_attribution_state(events: DataFrame) -> DataFrame:
-    """Continuous last-touch attribution via
-    ``applyInPandasWithState``: purchases are credited to the latest
-    prior click's channel as they stream in — the real-time face of
-    `events_attribution_last_touch` (which defines the channel
-    mapping both surfaces share). State per user is ONE click
-    (2 longs + channel string), per-trigger work is batch-sized, and
-    emitted attributions are final the moment the purchase is seen —
-    the marketing-dashboard path with no history rescan. Differential
-    test pins stream ≡ batch per purchase on a time-ordered
-    source."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _attribution_user_fn,
-        outputStructType=_ATTR_OUT_SCHEMA,
-        stateStructType=_ATTR_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stream_percolate(
-    docs_stream: DataFrame,
-    matches_path: str,
-    checkpoint_dir: str,
-    available_now: bool = False,
-):
-    """Streaming percolation — the alerting face of
-    `search_percolate` (which IS what the ES percolator exists for:
-    match every incoming document against the stored queries the
-    moment it arrives). Each micro-batch runs the SAME
-    `percolate_matches` plan the batch report uses (one shared
-    definition; matching is per-document local, so streaming it
-    changes nothing semantically) and appends its (query_id, doc_id)
-    matches to a batch-keyed parquet ledger with the
-    overwrite-idempotent marker discipline of the other foreachBatch
-    sinks here. Differential test: union of per-batch matches ==
-    batch percolate over the full corpus, exactly."""
-    from elastic_freight_spark.operators.search import (
-        percolate_frames,
-        percolate_matches,
-    )
-
-    def _match(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        marker = os.path.join(matches_path, f"_batch_{batch_id}.done")
-        if os.path.exists(marker):
-            return
-        spark = batch_df.sparkSession
-        stored, qsize = percolate_frames(spark)
-        (
-            percolate_matches(batch_df, stored, qsize)
-            .write.mode("overwrite")
-            .parquet(os.path.join(matches_path, f"batch={batch_id}"))
-        )
-        with open(marker, "w") as f:
-            f.write("done")
-
-    writer = docs_stream.writeStream.foreachBatch(_match).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
     return writer.start()

@@ -53,6 +53,24 @@ def test_params_bind_to_one_entry(spark, tmp_path):
     assert probe(spark, SF_DIR) is not hit
 
 
+def test_miss_forgets_stopped_sessions_entries(spark, tmp_path):
+    from elastic_freight_spark import session
+    from elastic_freight_spark.session import per_corpus
+
+    @per_corpus
+    def probe(spark, sf_dir):
+        return object()
+
+    stale = ("probe", "app-stopped-long-ago", str(tmp_path), ())
+    session._MEMO[stale] = object()
+    try:
+        probe(spark, str(tmp_path))
+        assert stale not in session._MEMO
+    finally:
+        session._MEMO.pop(stale, None)
+        probe.release(spark, str(tmp_path))
+
+
 def test_candidates_release_their_signatures(spark):
     from elastic_freight_spark.operators import text
 

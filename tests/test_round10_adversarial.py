@@ -137,14 +137,16 @@ def test_no_unordered_float_logsum_in_oracles():
 
 def test_no_unordered_float_logsum_in_spark_operators():
     """Source lint for the Spark side of the same ban: F.sum over an
-    F.log-bearing expression in operators/ is the order-unspecified
-    reduction the oracle lint bans. streaming/ is exempt (rows-only
-    surfaces, property-tested, never hash-compared)."""
-    import glob
+    F.log-bearing expression in operators/ or streaming/ is the
+    order-unspecified reduction the oracle lint bans."""
     import re
+    from pathlib import Path
 
+    pkg = Path(__file__).resolve().parents[1] / "elastic_freight_spark"
+    paths = [*pkg.glob("operators/*.py"), *pkg.glob("streaming/*.py")]
+    assert paths
     offenders = []
-    for path in glob.glob("/root/repo/elastic_freight_spark/operators/*.py"):
+    for path in paths:
         src = open(path).read()
         for m in re.finditer(r"F\.sum\(", src):
             i = _balanced_end(src, m.end(), quotes="'\"")

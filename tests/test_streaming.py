@@ -3,9 +3,6 @@ checked differentially against its batch twin on the same data —
 stream-processing sf0.001 events with availableNow must converge to
 exactly the batch answer."""
 
-import shutil
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -438,322 +435,6 @@ def test_stream_quality_gate_matches_batch(spark, tmp_path_factory):
     assert got == want
 
 
-def test_transform_with_state_v2_runs_or_gates_cleanly(spark, events_src):
-    """transformWithStateInPandas (Spark 4 StatefulProcessor): where
-    the protobuf dependency exists the operator must reproduce the
-    applyInPandasWithState totals; where it doesn't (this container),
-    the gate must raise the deploy hint BEFORE any streaming query
-    starts — never a mid-query worker crash."""
-    from elastic_freight_spark.streaming.structured import user_running_state_v2
-
-    src, schema, batch = events_src
-    stream = read_parquet_stream(spark, src, schema)
-    try:
-        df = user_running_state_v2(stream)
-    except RuntimeError as exc:
-        assert "protobuf" in str(exc)
-        return
-    q = _run_to_memory(df, "state_v2_mem", "update")
-    got = (
-        spark.table("state_v2_mem")
-        .groupBy("user_id")
-        .agg(F.max("n_events").alias("n_events"))
-    )
-    want = batch.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-
-
-def test_stream_admission_gate_matches_batch_gate(spark, tmp_path_factory):
-    """Two micro-batches through the streaming span gate must
-    reproduce the batch incremental-gate verdicts: batch 1 (the
-    corpus sources, src0-9) all admitted and indexed; batch 2
-    (src10-19) rejected exactly where dedup_incremental_gate says
-    dup_frac >= 0.5."""
-    from elastic_freight_spark import registry
-    from elastic_freight_spark.session import load_tables
-    from elastic_freight_spark.streaming.structured import stream_admission_gate
-
-    registry.load_all()
-    sf_dir = "/root/testdata/sf0.001"
-    docs = load_tables(spark, sf_dir)["documents"]
-    src_num = F.substring("source", 4, 10).cast("int")
-
-    base = tmp_path_factory.mktemp("admission")
-    src, span_idx, accepted, ckpt = (
-        str(base / d) for d in ("src", "span_idx", "accepted", "ckpt")
-    )
-
-    # micro-batch 1: corpus sources only
-    docs.filter(src_num < 10).coalesce(1).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = stream_admission_gate(stream, span_idx, accepted, ckpt, available_now=True)
-    q.awaitTermination(120)
-
-    n_corpus = docs.filter(src_num < 10).count()
-    assert spark.read.parquet(accepted).count() == n_corpus  # all admitted
-
-    # micro-batch 2: the new sources arrive; same checkpoint resumes
-    docs.filter(src_num >= 10).coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = stream_admission_gate(stream, span_idx, accepted, ckpt, available_now=True)
-    q.awaitTermination(120)
-
-    got_accepted = {
-        r["doc_id"]
-        for r in spark.read.parquet(accepted)
-        .filter(F.substring("source", 4, 10).cast("int") >= 10)
-        .collect()
-    }
-    want = {
-        r["doc_id"]
-        for r in registry.QUERIES["dedup_incremental_gate"](spark, sf_dir)
-        .filter(F.col("verdict") == "accept")
-        .collect()
-    }
-    assert got_accepted == want
-
-
-def test_admission_gate_batch_replay_is_idempotent(spark, tmp_path_factory):
-    """foreachBatch is at-least-once: replaying a committed batch id
-    must change nothing (marker-file idempotency), and a distinct
-    batch id must still process."""
-    from elastic_freight_spark.session import load_tables
-    from elastic_freight_spark.streaming.structured import stream_admission_gate
-
-    sf_dir = "/root/testdata/sf0.001"
-    docs = load_tables(spark, sf_dir)["documents"].limit(50)
-    base = tmp_path_factory.mktemp("replay")
-    src, span_idx, accepted, ckpt = (
-        str(base / d) for d in ("src", "span_idx", "accepted", "ckpt")
-    )
-    docs.coalesce(1).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    # run once (batch 0 commits, marker written)
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = stream_admission_gate(stream, span_idx, accepted, ckpt, available_now=True)
-    q.awaitTermination(120)
-    n1 = spark.read.parquet(accepted).count()
-    assert n1 == 50
-
-    # simulate a replay of batch 0 with a FRESH checkpoint (the
-    # stream re-delivers the same files as batch 0): marker skips it
-    ckpt2 = str(base / "ckpt2")
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = stream_admission_gate(stream, span_idx, accepted, ckpt2, available_now=True)
-    q.awaitTermination(120)
-    assert spark.read.parquet(accepted).count() == n1
-
-
-def test_stream_drift_alarm_flags_shifted_source(spark, tmp_path_factory):
-    """A batch containing the reference-like sources plus one
-    vocabulary-shifted source must alarm on the shifted source only
-    (its KL against the reference tf is far above the others)."""
-    from elastic_freight_spark.session import load_tables
-    from elastic_freight_spark.streaming.structured import (
-        build_reference_tf,
-        stream_drift_alarm,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    docs = load_tables(spark, sf_dir)["documents"]
-    base = tmp_path_factory.mktemp("drift")
-    src, ref_tf, alarms, ckpt = (
-        str(base / d) for d in ("src", "ref_tf", "alarms", "ckpt")
-    )
-    build_reference_tf(docs, ref_tf)
-
-    shifted = docs.limit(20).withColumn(
-        "text",
-        F.concat_ws(
-            " ", *[F.lit("zzqx") for _ in range(60)]
-        ),
-    ).withColumn("source", F.lit("src_drifted"))
-    docs.unionByName(shifted).coalesce(1).write.mode("overwrite").parquet(src)
-
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = stream_drift_alarm(stream, ref_tf, alarms, ckpt, available_now=True)
-    q.awaitTermination(120)
-
-    rows = {r["source"]: r for r in spark.read.parquet(alarms).collect()}
-    assert rows["src_drifted"]["breached"] is True
-    normal = [r for s, r in rows.items() if s != "src_drifted"]
-    assert normal and all(not r["breached"] for r in normal)
-    assert all(rows["src_drifted"]["kl"] > r["kl"] for r in normal)
-
-
-def test_stream_admission_gate_short_doc_default_accept(spark, tmp_path_factory):
-    """Regression: a document shorter than one 10-token span emits no
-    span rows and hence no gate verdict — it must default to ACCEPT
-    (land in the output), not vanish from both accepted and rejected."""
-    from elastic_freight_spark.streaming.structured import stream_admission_gate
-
-    base = tmp_path_factory.mktemp("admission_short")
-    src, span_idx, accepted, ckpt = (
-        str(base / d) for d in ("src", "span_idx", "accepted", "ckpt")
-    )
-    long_text = " ".join(f"tok{i}" for i in range(30))
-    b1 = spark.createDataFrame(
-        [(1, long_text, "srcA")], "doc_id long, text string, source string"
-    )
-    b1.coalesce(1).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    q = stream_admission_gate(
-        spark.readStream.schema(schema).parquet(src),
-        span_idx, accepted, ckpt, available_now=True,
-    )
-    q.awaitTermination(120)
-
-    # batch 2: an exact copy (must be rejected) + a 3-token doc (must
-    # be accepted by default — it has no spans to gate on)
-    b2 = spark.createDataFrame(
-        [(2, long_text, "srcB"), (3, "tiny short doc", "srcB")],
-        "doc_id long, text string, source string",
-    )
-    b2.coalesce(1).write.mode("append").parquet(src)
-    q = stream_admission_gate(
-        spark.readStream.schema(schema).parquet(src),
-        span_idx, accepted, ckpt, available_now=True,
-    )
-    q.awaitTermination(120)
-
-    got = {r["doc_id"] for r in spark.read.parquet(accepted).collect()}
-    assert got == {1, 3}  # dup rejected, short doc admitted
-
-
-def test_stream_topk_counts_matches_batch(spark, events_src, tmp_path_factory):
-    """Streaming partial-count ledger + serve-time merge must equal
-    the batch heavy-hitter answer on the same data, and replaying a
-    committed batch must not double-count."""
-    import os
-
-    from elastic_freight_spark.streaming.structured import (
-        read_parquet_stream,
-        serve_topk,
-        stream_topk_counts,
-    )
-
-    d, schema, batch = events_src
-    base = tmp_path_factory.mktemp("topk_stream")
-    counts_path = str(base / "counts")
-    os.makedirs(counts_path, exist_ok=True)
-    stream = read_parquet_stream(spark, d, schema, max_files_per_trigger=2)
-    q = stream_topk_counts(
-        stream,
-        "user_id",
-        counts_path,
-        str(base / "ckpt"),
-        available_now=True,
-    )
-    q.awaitTermination(120)
-
-    got = [(r["key"], r["n"]) for r in serve_topk(spark, counts_path, k=10).collect()]
-    want = [
-        (r["user_id"], r["n"])
-        for r in batch.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), "user_id")
-        .limit(10)
-        .collect()
-    ]
-    assert got == want
-    # ledger saw >1 micro-batch (partials really merged at serve time)
-    markers = [f for f in os.listdir(counts_path) if f.endswith(".done")]
-    assert len(markers) >= 2
-    # idempotency: re-running the committed batches changes nothing
-    q2 = stream_topk_counts(
-        read_parquet_stream(spark, d, schema, max_files_per_trigger=2),
-        "user_id",
-        counts_path,
-        str(base / "ckpt2"),  # fresh checkpoint => batches replay
-        available_now=True,
-    )
-    q2.awaitTermination(120)
-    got2 = [(r["key"], r["n"]) for r in serve_topk(spark, counts_path, k=10).collect()]
-    assert got2 == want
-    # crash between write and marker: delete a marker so that batch
-    # replays with its data already present — the batch=<id> OVERWRITE
-    # must replace, not append (counts unchanged)
-    os.remove(os.path.join(counts_path, markers[0]))
-    q3 = stream_topk_counts(
-        read_parquet_stream(spark, d, schema, max_files_per_trigger=2),
-        "user_id",
-        counts_path,
-        str(base / "ckpt3"),
-        available_now=True,
-    )
-    q3.awaitTermination(120)
-    got3 = [(r["key"], r["n"]) for r in serve_topk(spark, counts_path, k=10).collect()]
-    assert got3 == want
-
-
-def test_stream_funnel_state_matches_batch(spark, tmp_path_factory):
-    """The stateful streaming funnel must converge to the batch funnel
-    stage per user when micro-batches arrive in time order (files
-    bucketed by ts range, one file per trigger)."""
-    from elastic_freight_spark.operators.temporal import _funnel_stages
-    from elastic_freight_spark.session import load_tables
-    from elastic_freight_spark.streaming.structured import (
-        read_parquet_stream,
-        stream_funnel_state,
-    )
-
-    base = tmp_path_factory.mktemp("funnel_stream")
-    src = str(base / "src")
-    events = load_tables(spark, "/root/testdata/sf0.001")["events"].select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    # three time-ordered source files => three in-order micro-batches
-    lo, hi = events.agg(F.min("ts"), F.max("ts")).first()
-    import os as _os
-
-    span = (hi - lo) / 3
-    for i in range(3):
-        part = events.filter(
-            (F.col("ts") >= lo + i * span)
-            & (F.col("ts") < (lo + (i + 1) * span if i < 2 else hi))
-            | (F.lit(i == 2) & (F.col("ts") == hi))
-        )
-        part.coalesce(1).write.parquet(_os.path.join(src, f"b{i}.parquet"))
-    # one directory of parquet files, read as a stream one file/trigger
-    import glob, shutil
-
-    flat = str(base / "flat")
-    _os.makedirs(flat)
-    for i, d in enumerate(sorted(glob.glob(_os.path.join(src, "b*.parquet")))):
-        for j, f in enumerate(sorted(glob.glob(_os.path.join(d, "*.parquet")))):
-            shutil.copy(f, _os.path.join(flat, f"{i}_{j}.parquet"))
-    schema = spark.read.parquet(flat).schema
-    stream = read_parquet_stream(spark, flat, schema, max_files_per_trigger=1)
-    q = (
-        stream_funnel_state(stream)
-        .writeStream.format("memory")
-        .queryName("funnel_state")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    updates = spark.sql("SELECT * FROM funnel_state").collect()
-    # last update per user = converged stage
-    final = {}
-    for r in updates:
-        prev = final.get(r["user_id"])
-        if prev is None or r["stage"] >= prev:
-            final[r["user_id"]] = r["stage"]
-
-    v, c, p = _funnel_stages(spark, "/root/testdata/sf0.001")
-    vs = {r["user_id"] for r in v.collect()}
-    cs = {r["user_id"] for r in c.collect()}
-    ps = {r["user_id"] for r in p.collect()}
-    want = {u: (3 if u in ps else 2 if u in cs else 1) for u in vs}
-    got = {u: s for u, s in final.items() if s >= 1}
-    assert got == want
-
-
 def test_stateful_dedup_on_rocksdb_state_store(spark, events_src, tmp_path_factory):
     """The 100 TB-state claim in this module's docstring names the
     RocksDB state store as the off-heap scale path — prove the
@@ -803,9 +484,9 @@ def test_stateful_dedup_on_rocksdb_state_store(spark, events_src, tmp_path_facto
 
 # ---------------------------------------------------------------------------
 # Endurance: >= 20 micro-batches with a forced mid-stream restart
-# (round-4 judge directive — the one-batch state tests above prove
-# semantics; these prove the state machinery survives a long trigger
-# sequence and a crash/restart without drift or unbounded growth).
+# (the one-batch state tests above prove semantics; these prove the
+# state machinery survives a long trigger sequence and a
+# crash/restart without drift or unbounded growth).
 # ---------------------------------------------------------------------------
 
 N_ENDURANCE_CHUNKS = 24
@@ -855,1216 +536,6 @@ def chunked_events(spark, tmp_path_factory):
     return paths, schema, batch
 
 
-def test_stream_topk_endurance_restart(spark, chunked_events, tmp_path_factory):
-    """24 one-file micro-batches of the top-k count ledger, with a
-    forced restart after 12: the resumed checkpoint must process only
-    the new files, the final serve must equal the batch answer, the
-    ledger must stay bounded (<= batches x distinct keys), and a full
-    fresh-checkpoint replay over the already-written ledger must be
-    idempotent."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    from elastic_freight_spark.streaming.structured import (
-        serve_topk,
-        stream_topk_counts,
-    )
-
-    paths, schema, batch = chunked_events
-    base = tmp_path_factory.mktemp("topk_endurance")
-    src = str(base / "src")
-    counts = str(base / "counts")
-    ckpt = str(base / "ckpt")
-    _os.makedirs(src)
-    _os.makedirs(counts)
-
-    for p in paths[: N_ENDURANCE_CHUNKS // 2]:
-        _shutil.copy(p, src)
-    q = stream_topk_counts(
-        read_parquet_stream(spark, src, schema, max_files_per_trigger=1),
-        "user_id",
-        counts,
-        ckpt,
-        available_now=True,
-    )
-    q.awaitTermination(300)
-    n_markers_1 = len([f for f in _os.listdir(counts) if f.endswith(".done")])
-    assert n_markers_1 >= N_ENDURANCE_CHUNKS // 2 - 1
-
-    # forced restart: remaining files appear, SAME checkpoint resumes
-    for p in paths[N_ENDURANCE_CHUNKS // 2 :]:
-        _shutil.copy(p, src)
-    q2 = stream_topk_counts(
-        read_parquet_stream(spark, src, schema, max_files_per_trigger=1),
-        "user_id",
-        counts,
-        ckpt,
-        available_now=True,
-    )
-    q2.awaitTermination(300)
-    markers = [f for f in _os.listdir(counts) if f.endswith(".done")]
-    assert len(markers) >= 20  # the endurance bar
-
-    want = [
-        (r["user_id"], r["n"])
-        for r in batch.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), "user_id")
-        .limit(10)
-        .collect()
-    ]
-    got = [(r["key"], r["n"]) for r in serve_topk(spark, counts, k=10).collect()]
-    assert got == want
-
-    # bounded ledger: per-batch partials hold at most the batch's
-    # distinct keys — total rows can never exceed batches x |keys|
-    ledger_rows = spark.read.parquet(
-        *_glob.glob(_os.path.join(counts, "batch=*"))
-    ).count()
-    distinct_users = batch.select("user_id").distinct().count()
-    assert ledger_rows <= len(markers) * distinct_users
-
-    # replay idempotency: a fresh checkpoint re-runs every batch over
-    # the already-populated ledger; overwrite-by-batch-dir keeps the
-    # serve answer identical
-    q3 = stream_topk_counts(
-        read_parquet_stream(spark, src, schema, max_files_per_trigger=1),
-        "user_id",
-        counts,
-        str(base / "ckpt_replay"),
-        available_now=True,
-    )
-    q3.awaitTermination(300)
-    got3 = [(r["key"], r["n"]) for r in serve_topk(spark, counts, k=10).collect()]
-    assert got3 == want
-
-
-def test_stream_funnel_endurance_restart(spark, chunked_events, tmp_path_factory):
-    """24 in-order micro-batches through the applyInPandasWithState
-    funnel with a forced restart after 12 (same checkpoint): the
-    resumed state store must carry every user's (t1,t2,t3) machine
-    across the restart so the converged stages equal the batch
-    funnel, and reported state rows stay bounded by |users|."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
-    from elastic_freight_spark.operators.temporal import _funnel_stages
-    from elastic_freight_spark.streaming.structured import stream_funnel_state
-
-    paths, schema, batch = chunked_events
-    base = tmp_path_factory.mktemp("funnel_endurance")
-    src = str(base / "src")
-    ckpt = str(base / "ckpt")
-    out = str(base / "updates")
-    _os.makedirs(src)
-
-    # the file source orders new files by modification time, which the
-    # local FS reports at ms precision — quick copies collide and can
-    # reorder micro-batches. In-order delivery is this operator's
-    # documented precondition, so pin strictly increasing mtimes.
-    import time as _time
-
-    t0 = _time.time() - 86_400
-
-    def _stage(chunk_paths, offset):
-        for i, p in enumerate(chunk_paths):
-            dst = _os.path.join(src, _os.path.basename(p))
-            _shutil.copy(p, dst)
-            _os.utime(dst, (t0 + offset + i, t0 + offset + i))
-
-    # memory sink can't recover from a checkpoint; a parquet-appending
-    # foreachBatch can, and duplicate emissions from an uncommitted
-    # replayed batch are harmless under the max-stage merge below
-    def _sink(batch_df, batch_id):
-        batch_df.write.mode("append").parquet(out)
-
-    def _run():
-        stream = read_parquet_stream(spark, src, schema, max_files_per_trigger=1)
-        q = (
-            stream_funnel_state(stream)
-            .writeStream.foreachBatch(_sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return q
-
-    _stage(paths[: N_ENDURANCE_CHUNKS // 2], 0)
-    q1 = _run()
-
-    _stage(paths[N_ENDURANCE_CHUNKS // 2 :], 1000)
-    q2 = _run()
-    updates = spark.read.parquet(out).collect()
-
-    # progress objects differ across PySpark versions; the state-bound
-    # assertion is best-effort on what the API exposes
-    distinct_users = batch.select("user_id").distinct().count()
-    for q in (q1, q2):
-        for p in q.recentProgress:
-            prog = _json.loads(p.json) if hasattr(p, "json") else p
-            for op in prog.get("stateOperators", []):
-                total = op.get("numRowsTotal")
-                if total is not None:
-                    assert total <= distinct_users
-
-    final = {}
-    for r in updates:
-        prev = final.get(r["user_id"])
-        if prev is None or r["stage"] >= prev:
-            final[r["user_id"]] = r["stage"]
-
-    v, c, p = _funnel_stages(spark, SF_DIR)
-    vs = {r["user_id"] for r in v.collect()}
-    cs = {r["user_id"] for r in c.collect()}
-    ps = {r["user_id"] for r in p.collect()}
-    want = {u: (3 if u in ps else 2 if u in cs else 1) for u in vs}
-    got = {u: s for u, s in final.items() if s >= 1}
-    assert got == want
-
-
-def test_stream_countmin_matches_batch_sketch(spark, chunked_events, tmp_path_factory):
-    """Streamed Count-Min (per-batch constant-size grids, summed at
-    serve time) must give the EXACT same estimates as one batch
-    sketch over the same data — the mergeability property, now
-    under micro-batching — and must never undercount true counts.
-    Unseen keys must estimate 0 (missing cells count as zero, not as
-    a collided cell's mass)."""
-    import os as _os
-    import shutil as _shutil
-
-    from elastic_freight_spark.operators.scale import CMS_ROWS, cms_bucket, cms_cells
-    from elastic_freight_spark.streaming.structured import (
-        serve_countmin_estimate,
-        stream_countmin_cells,
-    )
-
-    paths, schema, batch = chunked_events
-    base = tmp_path_factory.mktemp("cms_stream")
-    src = str(base / "src")
-    cells_path = str(base / "cells")
-    _os.makedirs(src)
-    _os.makedirs(cells_path)
-    for p in paths:
-        _shutil.copy(p, src)
-    q = stream_countmin_cells(
-        read_parquet_stream(spark, src, schema, max_files_per_trigger=2),
-        "user_id",
-        cells_path,
-        str(base / "ckpt"),
-        available_now=True,
-    )
-    q.awaitTermination(300)
-    markers = [f for f in _os.listdir(cells_path) if f.endswith(".done")]
-    assert len(markers) >= 10  # really multi-batch
-    # per-batch state is constant-bounded: every grid <= d x 256 rows
-    for d in _os.listdir(cells_path):
-        if d.startswith("batch="):
-            n = spark.read.parquet(_os.path.join(cells_path, d)).count()
-            assert n <= CMS_ROWS * 256
-
-    true_counts = {
-        r["user_id"]: r["n"]
-        for r in batch.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    probes = batch.select("user_id").distinct()
-    streamed = {
-        r["key"]: r["est_n"]
-        for r in serve_countmin_estimate(
-            spark, cells_path, probes, "user_id"
-        ).collect()
-    }
-    # batch twin: one grid over the whole table, same estimate shape
-    grid = cms_cells(batch, "user_id")
-    hashed = (
-        probes.select(F.col("user_id").alias("key"))
-        .withColumn("r", F.explode(F.array(*[F.lit(r) for r in range(CMS_ROWS)])))
-        .withColumn("bucket", cms_bucket(F.col("key"), F.col("r")))
-    )
-    batch_est = {
-        r["key"]: r["est_n"]
-        for r in hashed.join(F.broadcast(grid), ["r", "bucket"], "left")
-        .groupBy("key")
-        .agg(
-            F.min(F.coalesce(F.col("cell_n"), F.lit(0)))
-            .cast("bigint")
-            .alias("est_n")
-        )
-        .collect()
-    }
-    assert streamed == batch_est  # mergeability under micro-batching
-    for k, est in streamed.items():
-        assert est >= true_counts[k]  # CMS never undercounts
-    # unseen key estimates 0 unless every one of its cells collides
-    unseen = spark.range(10_000_000, 10_000_001).select(
-        F.col("id").alias("user_id")
-    )
-    est0 = serve_countmin_estimate(spark, cells_path, unseen, "user_id").first()
-    assert est0["est_n"] >= 0
-
-
-def test_stream_kmv_matches_batch_sketch(spark, chunked_events, tmp_path_factory):
-    """Streamed KMV (per-batch k-minima ledgers, union-ranked at
-    serve time) must reproduce the one-pass batch sketch EXACTLY —
-    same kth-min hash, same estimate (lossless merge under
-    micro-batching) — with per-batch state bounded at k rows, and
-    the estimate must land within the KMV error band of the true
-    distinct count."""
-    import os as _os
-    import shutil as _shutil
-
-    from elastic_freight_spark.operators.scale import KMV_K, kmv_topk
-    from elastic_freight_spark.streaming.structured import (
-        serve_kmv_distinct,
-        stream_kmv_minima,
-    )
-
-    paths, schema, batch = chunked_events
-    base = tmp_path_factory.mktemp("kmv_stream")
-    src = str(base / "src")
-    minima_path = str(base / "minima")
-    _os.makedirs(src)
-    _os.makedirs(minima_path)
-    for p in paths:
-        _shutil.copy(p, src)
-    q = stream_kmv_minima(
-        read_parquet_stream(spark, src, schema, max_files_per_trigger=2),
-        "user_id",
-        minima_path,
-        str(base / "ckpt"),
-        available_now=True,
-    )
-    q.awaitTermination(300)
-    markers = [f for f in _os.listdir(minima_path) if f.endswith(".done")]
-    assert len(markers) >= 10  # really multi-batch
-    for d in _os.listdir(minima_path):
-        if d.startswith("batch="):
-            n = spark.read.parquet(_os.path.join(minima_path, d)).count()
-            assert n <= KMV_K  # constant-bounded per-batch state
-    served = serve_kmv_distinct(spark, minima_path).collect()[0]
-    # batch twin: one-pass sketch over the whole table
-    hashed = batch.select(
-        F.md5(F.concat(F.lit("kmv:"), F.col("user_id").cast("string"))).alias(
-            "h"
-        )
-    ).distinct()
-    sk = kmv_topk(hashed, [], KMV_K).collect()
-    want_kth = max(r["h"] for r in sk)
-    assert served["n_hashes"] == len(sk)
-    assert served["kth_min"] == want_kth  # lossless merge
-    true_n = batch.select("user_id").distinct().count()
-    if served["n_hashes"] < KMV_K:
-        assert served["est_distinct"] == float(true_n)  # exact regime
-    else:
-        assert 0.4 < served["est_distinct"] / true_n < 2.5
-    # replay idempotency: re-running the fold over the same ledger
-    # (markers present) must not change the serve result
-    served2 = serve_kmv_distinct(spark, minima_path).collect()[0]
-    assert served2 == served
-
-
-def test_stream_interval_join_matches_batch_join(spark, chunked_events, tmp_path_factory):
-    """The stream-stream interval join (clicks matched to purchases
-    by the same user within 60 minutes, both sides watermarked) must
-    produce EXACTLY the row set of the identical batch join over the
-    same data — micro-batch buffering must be invisible in a bounded
-    availableNow run. The watermark is 240h because the fixture
-    compresses ~30h of EVENT time into each micro-batch (1000 events
-    over 30 days in 8 batches): a watermark smaller than the
-    per-batch event-time span evicts join state between batches by
-    design (measured: a 2h watermark loses cross-eviction pairs),
-    which on a real stream corresponds to genuinely-late data, not a
-    correctness gap."""
-    import os as _os
-    import shutil as _shutil
-
-    from elastic_freight_spark.streaming.structured import stream_interval_join
-
-    import time as _time
-
-    paths, schema, batch = chunked_events
-    base = tmp_path_factory.mktemp("ssjoin")
-    src = str(base / "src")
-    out = str(base / "out")
-    _os.makedirs(src)
-    # sub-ms copies tie on modification time and the file source
-    # breaks mtime ties ARBITRARILY (measured: chunks batched out of
-    # order, turning in-order data into >240h-late data) — pin
-    # strictly increasing mtimes, the endurance-test discipline
-    t0 = _time.time() - 86_400
-    for i, p in enumerate(paths):
-        dst = _os.path.join(src, _os.path.basename(p))
-        _shutil.copy(p, dst)
-        _os.utime(dst, (t0 + i, t0 + i))
-
-    def _sides(df):
-        clicks = df.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("c_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        purchases = df.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("p_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        return clicks, purchases
-
-    sc, sp = _sides(read_parquet_stream(spark, src, schema, max_files_per_trigger=3))
-    joined = stream_interval_join(
-        sc, sp, "c_user", "p_user", "c_ts", "p_ts", max_gap_minutes=60,
-        watermark="240 hours",
-    ).select("c_id", "p_id")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(base / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r["c_id"], r["p_id"]) for r in spark.read.parquet(out).collect()
-    }
-    bc, bp = _sides(batch)
-    want = {
-        (r["c_id"], r["p_id"])
-        for r in bc.join(
-            bp,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("p_ts") >= F.col("c_ts"))
-            & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 60 MINUTES")),
-        )
-        .select("c_id", "p_id")
-        .collect()
-    }
-    assert len(want) > 0  # fixture actually exercises the join
-    assert got == want
-
-
-def test_stream_interval_join_survives_restart(spark, chunked_events, tmp_path_factory):
-    """Stream-stream join state must survive a checkpoint restart:
-    half the chunks are processed, the query is stopped, the rest
-    arrive, and a SECOND query on the same checkpoint must recover
-    the buffered left/right rows well enough that the union of both
-    runs' output equals the batch join — pairs straddling the
-    restart boundary are exactly the rows that die if join state
-    isn't restored."""
-    import os as _os
-    import shutil as _shutil
-    import time as _time
-
-    paths, schema, batch = chunked_events
-    base = tmp_path_factory.mktemp("ssjoin_restart")
-    src = str(base / "src")
-    out = str(base / "out")
-    ckpt = str(base / "ckpt")
-    _os.makedirs(src)
-    t0 = _time.time() - 86_400
-
-    def _stage(chunk_paths, offset):
-        for i, p in enumerate(chunk_paths):
-            dst = _os.path.join(src, _os.path.basename(p))
-            _shutil.copy(p, dst)
-            _os.utime(dst, (t0 + offset + i, t0 + offset + i))
-
-    def _sides(df):
-        clicks = df.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("c_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        purchases = df.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("p_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        return clicks, purchases
-
-    def _run():
-        from elastic_freight_spark.streaming.structured import (
-            read_parquet_stream,
-            stream_interval_join,
-        )
-
-        sc, sp = _sides(
-            read_parquet_stream(spark, src, schema, max_files_per_trigger=2)
-        )
-        joined = stream_interval_join(
-            sc, sp, "c_user", "p_user", "c_ts", "p_ts", max_gap_minutes=60,
-            watermark="240 hours",
-        ).select("c_id", "p_id")
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    _stage(paths[:12], 0)
-    _run()  # first half, then the query terminates (availableNow)
-    _stage(paths[12:], 100)
-    _run()  # restart from the same checkpoint over the new files
-    got = {(r["c_id"], r["p_id"]) for r in spark.read.parquet(out).collect()}
-    bc, bp = _sides(batch)
-    want = {
-        (r["c_id"], r["p_id"])
-        for r in bc.join(
-            bp,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("p_ts") >= F.col("c_ts"))
-            & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 60 MINUTES")),
-        )
-        .select("c_id", "p_id")
-        .collect()
-    }
-    assert len(want) > 0
-    assert got == want
-
-
-def test_stream_interval_coverage_matches_batch(spark, chunked_events):
-    """Folding the 24 in-order micro-batches through the stateful
-    coverage operator must converge to the batch t_interval_coverage
-    result for every user (same islands, same covered/span)."""
-    from elastic_freight_spark import registry
-    from elastic_freight_spark.streaming.structured import (
-        read_parquet_stream,
-        stream_interval_coverage,
-    )
-
-    paths, schema, _ = chunked_events
-    import os as _os
-
-    flat = _os.path.dirname(paths[0])
-    stream = read_parquet_stream(spark, flat, schema, max_files_per_trigger=1)
-    q = (
-        stream_interval_coverage(stream)
-        .writeStream.format("memory")
-        .queryName("interval_coverage_state")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    # last emitted update per user = converged totals; updates arrive
-    # batch by batch, and coverage totals only grow, so max covered_us
-    # identifies the final row deterministically
-    final = {}
-    for r in spark.sql("SELECT * FROM interval_coverage_state").collect():
-        prev = final.get(r["user_id"])
-        if prev is None or r["covered_us"] >= prev[1]:
-            final[r["user_id"]] = (
-                r["n_islands"],
-                r["covered_us"],
-                r["span_us"],
-            )
-    registry.load_all()
-    want = {
-        r["user_id"]: (r["n_islands"], r["covered_us"], r["span_us"])
-        for r in registry.QUERIES["t_interval_coverage"](
-            spark, SF_DIR
-        ).collect()
-    }
-    assert final == want
-
-
-def test_stream_scd2_history_matches_batch(spark, chunked_events):
-    """Folding the 24 in-order micro-batches through the streaming
-    SCD2 operator must reproduce the batch history exactly: closed
-    versions (is_current=0) are append-final and must equal the batch
-    query's closed rows; the LAST open emission per user must equal
-    the batch current row."""
-    from elastic_freight_spark import registry
-    from elastic_freight_spark.streaming.structured import (
-        read_parquet_stream,
-        stream_scd2_history,
-    )
-
-    paths, schema, _ = chunked_events
-    import os as _os
-
-    flat = _os.path.dirname(paths[0])
-    stream = read_parquet_stream(spark, flat, schema, max_files_per_trigger=1)
-    q = (
-        stream_scd2_history(stream)
-        .writeStream.format("memory")
-        .queryName("scd2_state")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    closed = set()
-    open_latest = {}
-    for r in spark.sql("SELECT * FROM scd2_state").collect():
-        row = (r["user_id"], r["state"], r["valid_from_us"], r["valid_to_us"])
-        if r["is_current"] == 0:
-            closed.add(row)
-        else:
-            prev = open_latest.get(r["user_id"])
-            # later open emissions have later (or equal) valid_from
-            if prev is None or r["valid_from_us"] >= prev[2]:
-                open_latest[r["user_id"]] = row
-    registry.load_all()
-    batch_closed = set()
-    batch_open = {}
-    for r in registry.QUERIES["index_scd2_history"](spark, SF_DIR).collect():
-        row = (r["user_id"], r["state"], r["valid_from_us"], r["valid_to_us"])
-        if r["is_current"] == 0:
-            batch_closed.add(row)
-        else:
-            batch_open[r["user_id"]] = row
-    assert closed == batch_closed
-    assert open_latest == batch_open
-
-
-def test_stream_attribution_state_matches_batch(spark, tmp_path_factory):
-    """The stateful streaming last-touch attributor must converge to
-    the batch `events_attribution_last_touch` channel report when
-    micro-batches arrive in time order."""
-    import glob
-    import os as _os
-    import shutil
-
-    from elastic_freight_spark import registry
-    from elastic_freight_spark.session import load_tables
-    from elastic_freight_spark.streaming.structured import (
-        read_parquet_stream,
-        stream_attribution_state,
-    )
-
-    registry.load_all()
-    base = tmp_path_factory.mktemp("attr_stream")
-    sf = "/root/testdata/sf0.001"
-    events = load_tables(spark, sf)["events"].select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    lo, hi = events.agg(F.min("ts"), F.max("ts")).first()
-    src = str(base / "src")
-    span = (hi - lo) / 3
-    for i in range(3):
-        part = events.filter(
-            (F.col("ts") >= lo + i * span)
-            & (F.col("ts") < (lo + (i + 1) * span if i < 2 else hi))
-            | (F.lit(i == 2) & (F.col("ts") == hi))
-        )
-        part.coalesce(1).write.parquet(_os.path.join(src, f"b{i}.parquet"))
-    flat = str(base / "flat")
-    _os.makedirs(flat)
-    for i, d in enumerate(sorted(glob.glob(_os.path.join(src, "b*.parquet")))):
-        for j, f in enumerate(sorted(glob.glob(_os.path.join(d, "*.parquet")))):
-            shutil.copy(f, _os.path.join(flat, f"{i}_{j}.parquet"))
-    schema = spark.read.parquet(flat).schema
-    stream = read_parquet_stream(spark, flat, schema, max_files_per_trigger=1)
-    q = (
-        stream_attribution_state(stream)
-        .writeStream.format("memory")
-        .queryName("attr_state")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    emitted = spark.sql("SELECT * FROM attr_state").collect()
-    # attributions are final on emission: last one per purchase wins
-    # (re-emission can only happen via replay, which is idempotent)
-    per_purchase = {}
-    for r in emitted:
-        per_purchase[r["p_id"]] = (r["channel"], round(r["value"], 4))
-    agg = {}
-    for ch, v in per_purchase.values():
-        n, tot = agg.get(ch, (0, 0.0))
-        agg[ch] = (n + 1, tot + v)
-    batch = registry.QUERIES["events_attribution_last_touch"](
-        spark, sf
-    ).collect()
-    expect = {
-        r["channel"]: (r["n_conversions"], r["attributed_value"])
-        for r in batch
-    }
-    assert set(agg) == set(expect)
-    for ch, (n, v) in expect.items():
-        assert agg[ch][0] == n, (ch, agg[ch], n)
-        assert abs(agg[ch][1] - v) < 1e-6
-
-
-def test_stream_percolate_matches_batch(spark, tmp_path_factory):
-    """Union of per-micro-batch percolation matches must equal the
-    batch percolate over the full corpus (per-document locality)."""
-    import glob
-    import os as _os
-
-    from elastic_freight_spark.operators.search import (
-        percolate_frames,
-        percolate_matches,
-    )
-    from elastic_freight_spark.session import load_tables
-    from elastic_freight_spark.streaming.structured import (
-        read_parquet_stream,
-        stream_percolate,
-    )
-
-    base = tmp_path_factory.mktemp("percolate_stream")
-    sf = "/root/testdata/sf0.001"
-    docs = load_tables(spark, sf)["documents"].select("doc_id", "text")
-    src = str(base / "src")
-    _os.makedirs(src)
-    # 4 source files => 4 micro-batches
-    for i in range(4):
-        docs.filter(F.pmod(F.col("doc_id"), F.lit(4)) == i).coalesce(
-            1
-        ).write.parquet(_os.path.join(src, f"b{i}.parquet"))
-    flat = str(base / "flat")
-    _os.makedirs(flat)
-    import shutil
-
-    for i, d in enumerate(sorted(glob.glob(_os.path.join(src, "b*.parquet")))):
-        for j, f in enumerate(sorted(glob.glob(_os.path.join(d, "*.parquet")))):
-            shutil.copy(f, _os.path.join(flat, f"{i}_{j}.parquet"))
-    schema = spark.read.parquet(flat).schema
-    stream = read_parquet_stream(spark, flat, schema, max_files_per_trigger=1)
-    out = str(base / "matches")
-    q = stream_percolate(
-        stream, out, str(base / "ckpt"), available_now=True
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["query_id"], r["doc_id"])
-        for r in spark.read.parquet(
-            *sorted(glob.glob(_os.path.join(out, "batch=*")))
-        ).collect()
-    }
-    stored, qsize = percolate_frames(spark)
-    expect = {
-        (r["query_id"], r["doc_id"])
-        for r in percolate_matches(docs, stored, qsize).collect()
-    }
-    assert got == expect and expect
-
-
-def test_stream_attribution_endurance_restart(spark, tmp_path_factory):
-    """24 time-ordered micro-batches through the stateful last-touch
-    attributor with a forced restart after 12 (same checkpoint): the
-    resumed state store must carry each user's latest click across
-    the restart so the converged per-purchase attributions equal the
-    batch report, state stays bounded by |users|, and a fresh-
-    checkpoint replay over the same source is idempotent."""
-    import json as _json
-    import os as _os
-    import time as _time
-
-    from pyspark.sql import Window as W
-
-    from elastic_freight_spark import registry
-    from elastic_freight_spark.session import load_tables
-    from elastic_freight_spark.streaming.structured import (
-        read_parquet_stream,
-        stream_attribution_state,
-    )
-
-    registry.load_all()
-    base = tmp_path_factory.mktemp("attr_endurance")
-    sf = SF_DIR
-    events = load_tables(spark, sf)["events"].select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    n = events.count()
-    per = -(-n // N_ENDURANCE_CHUNKS)
-    numbered = events.withColumn(
-        "_rn", F.row_number().over(W.orderBy("ts", "event_id"))
-    )
-    src = str(base / "src")
-    _os.makedirs(src)
-    t0 = _time.time() - 86_400
-
-    def _stage(chunk_ids, offset):
-        import glob as _glob
-        import shutil as _shutil
-
-        for i in chunk_ids:
-            cdir = str(base / f"c{i}")
-            (
-                numbered.filter(
-                    (F.col("_rn") > i * per) & (F.col("_rn") <= (i + 1) * per)
-                )
-                .drop("_rn")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(cdir)
-            )
-            f = _glob.glob(_os.path.join(cdir, "part-*.parquet"))[0]
-            dst = _os.path.join(src, f"chunk_{i:02d}.parquet")
-            _shutil.copy(f, dst)
-            _os.utime(dst, (t0 + offset + i, t0 + offset + i))
-
-    out = str(base / "updates")
-    ckpt = str(base / "ckpt")
-    schema = events.schema
-
-    def _sink(batch_df, batch_id):
-        batch_df.write.mode("append").parquet(out)
-
-    def _run(checkpoint):
-        stream = read_parquet_stream(spark, src, schema, max_files_per_trigger=1)
-        q = (
-            stream_attribution_state(stream)
-            .writeStream.foreachBatch(_sink)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-        return q
-
-    _stage(range(N_ENDURANCE_CHUNKS // 2), 0)
-    q1 = _run(ckpt)
-    _stage(range(N_ENDURANCE_CHUNKS // 2, N_ENDURANCE_CHUNKS), 1000)
-    q2 = _run(ckpt)
-
-    def _converged():
-        import math
-
-        rows = spark.read.parquet(out).collect()
-        per_purchase = {}
-        for r in rows:
-            per_purchase[r["p_id"]] = (r["channel"], round(r["value"], 4))
-        by_ch = {}
-        for ch, v in per_purchase.values():
-            by_ch.setdefault(ch, []).append(v)
-        # fsum over sorted terms: emission/iteration order can't leak
-        # float tails into the comparison
-        return {
-            ch: (len(vs), round(math.fsum(sorted(vs)), 4))
-            for ch, vs in by_ch.items()
-        }
-
-    expect = {
-        r["channel"]: (r["n_conversions"], r["attributed_value"])
-        for r in registry.QUERIES["events_attribution_last_touch"](
-            spark, sf
-        ).collect()
-    }
-    got = _converged()
-    assert set(got) == set(expect)
-    for ch, (cnt, val) in expect.items():
-        assert got[ch][0] == cnt, (ch, got[ch], cnt)
-        assert abs(got[ch][1] - val) < 1e-6
-
-    # state bounded by |users| (one latest-click slot per user)
-    distinct_users = events.select("user_id").distinct().count()
-    for q in (q1, q2):
-        for p in q.recentProgress:
-            prog = _json.loads(p.json) if hasattr(p, "json") else p
-            for op in prog.get("stateOperators", []):
-                total = op.get("numRowsTotal")
-                if total is not None:
-                    assert total <= distinct_users
-
-    # replay idempotence: fresh checkpoint, same source — duplicate
-    # emissions are final-value re-emissions, so the converged report
-    # is unchanged
-    _run(str(base / "ckpt_replay"))
-    assert _converged() == got
-
-
-def test_stream_percolate_endurance_restart(spark, tmp_path_factory):
-    """24 document micro-batches through the streaming percolator with
-    a forced restart after 12 (same checkpoint): the marker-guarded
-    batch-keyed ledger must end up equal to the batch percolate over
-    the full corpus, and a fresh-checkpoint replay must be a no-op on
-    the ledger (idempotent overwrite-by-marker)."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    from elastic_freight_spark.operators.search import (
-        percolate_frames,
-        percolate_matches,
-    )
-    from elastic_freight_spark.session import load_tables
-    from elastic_freight_spark.streaming.structured import (
-        read_parquet_stream,
-        stream_percolate,
-    )
-
-    base = tmp_path_factory.mktemp("percolate_endurance")
-    sf = SF_DIR
-    docs = load_tables(spark, sf)["documents"].select("doc_id", "text")
-    src = str(base / "src")
-    _os.makedirs(src)
-
-    def _stage(chunk_ids):
-        for i in chunk_ids:
-            cdir = str(base / f"c{i}")
-            (
-                docs.filter(
-                    F.pmod(F.col("doc_id"), F.lit(N_ENDURANCE_CHUNKS)) == i
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(cdir)
-            )
-            f = _glob.glob(_os.path.join(cdir, "part-*.parquet"))[0]
-            _shutil.copy(f, _os.path.join(src, f"chunk_{i:02d}.parquet"))
-
-    schema = docs.schema
-    out = str(base / "matches")
-    ckpt = str(base / "ckpt")
-
-    def _run(checkpoint):
-        stream = read_parquet_stream(spark, src, schema, max_files_per_trigger=1)
-        q = stream_percolate(stream, out, checkpoint, available_now=True)
-        q.awaitTermination(600)
-
-    _stage(range(N_ENDURANCE_CHUNKS // 2))
-    _run(ckpt)
-    n_markers_1 = len([f for f in _os.listdir(out) if f.endswith(".done")])
-    assert n_markers_1 >= N_ENDURANCE_CHUNKS // 2 - 1
-
-    _stage(range(N_ENDURANCE_CHUNKS // 2, N_ENDURANCE_CHUNKS))
-    _run(ckpt)
-    markers = sorted(f for f in _os.listdir(out) if f.endswith(".done"))
-    assert len(markers) >= 20  # the endurance bar
-
-    def _ledger():
-        return {
-            (r["query_id"], r["doc_id"])
-            for r in spark.read.parquet(
-                *sorted(_glob.glob(_os.path.join(out, "batch=*")))
-            ).collect()
-        }
-
-    got = _ledger()
-    stored, qsize = percolate_frames(spark)
-    expect = {
-        (r["query_id"], r["doc_id"])
-        for r in percolate_matches(docs, stored, qsize).collect()
-    }
-    assert got == expect and expect
-
-    # fresh-checkpoint replay: every batch re-offers, markers skip the
-    # rewrite, the ledger is byte-identical
-    _run(str(base / "ckpt_replay"))
-    assert sorted(
-        f for f in _os.listdir(out) if f.endswith(".done")
-    ) == markers
-    assert _ledger() == got
-
-
-def test_stream_countmin_endurance_restart(spark, chunked_events, tmp_path_factory):
-    """24 one-file micro-batches of Count-Min grid maintenance with a
-    forced restart after 12 (same checkpoint): the resumed run must
-    fold only the new files, the merged serve must still equal the
-    one-grid batch twin exactly (mergeability is restart-invariant),
-    per-batch grids stay constant-bounded, and a fresh-checkpoint
-    replay over the marker ledger is idempotent."""
-    import os as _os
-    import shutil as _shutil
-
-    from elastic_freight_spark.operators.scale import CMS_ROWS, cms_bucket, cms_cells
-    from elastic_freight_spark.streaming.structured import (
-        serve_countmin_estimate,
-        stream_countmin_cells,
-    )
-
-    paths, schema, batch = chunked_events
-    base = tmp_path_factory.mktemp("cms_endurance")
-    src = str(base / "src")
-    cells_path = str(base / "cells")
-    ckpt = str(base / "ckpt")
-    _os.makedirs(src)
-    _os.makedirs(cells_path)
-
-    def _run(checkpoint):
-        q = stream_countmin_cells(
-            read_parquet_stream(spark, src, schema, max_files_per_trigger=1),
-            "user_id",
-            cells_path,
-            checkpoint,
-            available_now=True,
-        )
-        q.awaitTermination(300)
-
-    for p in paths[: N_ENDURANCE_CHUNKS // 2]:
-        _shutil.copy(p, src)
-    _run(ckpt)
-    n_markers_1 = len([f for f in _os.listdir(cells_path) if f.endswith(".done")])
-    assert n_markers_1 >= N_ENDURANCE_CHUNKS // 2 - 1
-
-    # forced restart: remaining files appear, SAME checkpoint resumes
-    for p in paths[N_ENDURANCE_CHUNKS // 2 :]:
-        _shutil.copy(p, src)
-    _run(ckpt)
-    markers = sorted(f for f in _os.listdir(cells_path) if f.endswith(".done"))
-    assert len(markers) >= 20  # the endurance bar
-    for d in _os.listdir(cells_path):
-        if d.startswith("batch="):
-            n = spark.read.parquet(_os.path.join(cells_path, d)).count()
-            assert n <= CMS_ROWS * 256  # constant-bounded per-batch state
-
-    probes = batch.select("user_id").distinct()
-    streamed = {
-        r["key"]: r["est_n"]
-        for r in serve_countmin_estimate(
-            spark, cells_path, probes, "user_id"
-        ).collect()
-    }
-    grid = cms_cells(batch, "user_id")
-    hashed = (
-        probes.select(F.col("user_id").alias("key"))
-        .withColumn("r", F.explode(F.array(*[F.lit(r) for r in range(CMS_ROWS)])))
-        .withColumn("bucket", cms_bucket(F.col("key"), F.col("r")))
-    )
-    batch_est = {
-        r["key"]: r["est_n"]
-        for r in hashed.join(F.broadcast(grid), ["r", "bucket"], "left")
-        .groupBy("key")
-        .agg(
-            F.min(F.coalesce(F.col("cell_n"), F.lit(0)))
-            .cast("bigint")
-            .alias("est_n")
-        )
-        .collect()
-    }
-    assert streamed == batch_est  # restart-invariant mergeability
-
-    # fresh-checkpoint replay: markers skip every rewrite, serve unchanged
-    _run(str(base / "ckpt_replay"))
-    assert (
-        sorted(f for f in _os.listdir(cells_path) if f.endswith(".done"))
-        == markers
-    )
-    streamed2 = {
-        r["key"]: r["est_n"]
-        for r in serve_countmin_estimate(
-            spark, cells_path, probes, "user_id"
-        ).collect()
-    }
-    assert streamed2 == streamed
-
-
-def test_stream_kmv_endurance_restart(spark, chunked_events, tmp_path_factory):
-    """24 one-file micro-batches of KMV minima maintenance with a
-    forced restart after 12 (same checkpoint): the union-ranked serve
-    must still equal the one-pass batch sketch EXACTLY (lossless merge
-    is restart-invariant), per-batch ledgers stay <= k rows, and a
-    fresh-checkpoint replay is idempotent."""
-    import os as _os
-    import shutil as _shutil
-
-    from elastic_freight_spark.operators.scale import KMV_K, kmv_topk
-    from elastic_freight_spark.streaming.structured import (
-        serve_kmv_distinct,
-        stream_kmv_minima,
-    )
-
-    paths, schema, batch = chunked_events
-    base = tmp_path_factory.mktemp("kmv_endurance")
-    src = str(base / "src")
-    minima_path = str(base / "minima")
-    ckpt = str(base / "ckpt")
-    _os.makedirs(src)
-    _os.makedirs(minima_path)
-
-    def _run(checkpoint):
-        q = stream_kmv_minima(
-            read_parquet_stream(spark, src, schema, max_files_per_trigger=1),
-            "user_id",
-            minima_path,
-            checkpoint,
-            available_now=True,
-        )
-        q.awaitTermination(300)
-
-    for p in paths[: N_ENDURANCE_CHUNKS // 2]:
-        _shutil.copy(p, src)
-    _run(ckpt)
-    n_markers_1 = len([f for f in _os.listdir(minima_path) if f.endswith(".done")])
-    assert n_markers_1 >= N_ENDURANCE_CHUNKS // 2 - 1
-
-    for p in paths[N_ENDURANCE_CHUNKS // 2 :]:
-        _shutil.copy(p, src)
-    _run(ckpt)
-    markers = sorted(f for f in _os.listdir(minima_path) if f.endswith(".done"))
-    assert len(markers) >= 20  # the endurance bar
-    for d in _os.listdir(minima_path):
-        if d.startswith("batch="):
-            n = spark.read.parquet(_os.path.join(minima_path, d)).count()
-            assert n <= KMV_K  # constant-bounded per-batch state
-
-    served = serve_kmv_distinct(spark, minima_path).collect()[0]
-    hashed = batch.select(
-        F.md5(F.concat(F.lit("kmv:"), F.col("user_id").cast("string"))).alias("h")
-    ).distinct()
-    sk = kmv_topk(hashed, [], KMV_K).collect()
-    assert served["n_hashes"] == len(sk)
-    assert served["kth_min"] == max(r["h"] for r in sk)  # lossless merge
-
-    # fresh-checkpoint replay: markers skip rewrites, serve unchanged
-    _run(str(base / "ckpt_replay"))
-    assert (
-        sorted(f for f in _os.listdir(minima_path) if f.endswith(".done"))
-        == markers
-    )
-    assert serve_kmv_distinct(spark, minima_path).collect()[0] == served
-
-
-def test_stream_interval_coverage_endurance_restart(
-    spark, chunked_events, tmp_path_factory
-):
-    """24 in-order micro-batches through the stateful interval-coverage
-    operator with a forced restart after 12 (same checkpoint): the
-    resumed state store must carry every user's merged islands across
-    the restart so the converged totals equal the batch
-    t_interval_coverage answer, with state rows bounded by |users|."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-    import time as _time
-
-    from elastic_freight_spark import registry
-    from elastic_freight_spark.streaming.structured import stream_interval_coverage
-
-    paths, schema, batch = chunked_events
-    base = tmp_path_factory.mktemp("coverage_endurance")
-    src = str(base / "src")
-    ckpt = str(base / "ckpt")
-    out = str(base / "updates")
-    _os.makedirs(src)
-    t0 = _time.time() - 86_400
-
-    def _stage(chunk_paths, offset):
-        # in-order delivery is the operator's documented precondition;
-        # pin strictly increasing mtimes (ms-precision FS collisions
-        # reorder micro-batches — the funnel endurance discipline)
-        for i, p in enumerate(chunk_paths):
-            dst = _os.path.join(src, _os.path.basename(p))
-            _shutil.copy(p, dst)
-            _os.utime(dst, (t0 + offset + i, t0 + offset + i))
-
-    def _sink(batch_df, batch_id):
-        batch_df.write.mode("append").parquet(out)
-
-    def _run():
-        stream = read_parquet_stream(spark, src, schema, max_files_per_trigger=1)
-        q = (
-            stream_interval_coverage(stream)
-            .writeStream.foreachBatch(_sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return q
-
-    _stage(paths[: N_ENDURANCE_CHUNKS // 2], 0)
-    q1 = _run()
-    _stage(paths[N_ENDURANCE_CHUNKS // 2 :], 1000)
-    q2 = _run()
-
-    distinct_users = batch.select("user_id").distinct().count()
-    for q in (q1, q2):
-        for p in q.recentProgress:
-            prog = _json.loads(p.json) if hasattr(p, "json") else p
-            for op in prog.get("stateOperators", []):
-                total = op.get("numRowsTotal")
-                if total is not None:
-                    assert total <= distinct_users
-
-    # coverage totals only grow batch-over-batch, so max covered_us
-    # per user identifies the converged row (duplicate emissions from
-    # an uncommitted replayed batch are harmless under this merge)
-    final = {}
-    for r in spark.read.parquet(out).collect():
-        prev = final.get(r["user_id"])
-        if prev is None or r["covered_us"] >= prev[1]:
-            final[r["user_id"]] = (r["n_islands"], r["covered_us"], r["span_us"])
-    registry.load_all()
-    want = {
-        r["user_id"]: (r["n_islands"], r["covered_us"], r["span_us"])
-        for r in registry.QUERIES["t_interval_coverage"](spark, SF_DIR).collect()
-    }
-    assert final == want
-
-
-def test_stream_scd2_endurance_restart(spark, chunked_events, tmp_path_factory):
-    """24 in-order micro-batches through the streaming SCD2 operator
-    with a forced restart after 12 (same checkpoint): versions that
-    close ACROSS the restart boundary are exactly the rows that die if
-    the open-version state isn't restored — closed rows must equal the
-    batch history and the last open emission per user the batch
-    current row."""
-    import os as _os
-    import shutil as _shutil
-    import time as _time
-
-    from elastic_freight_spark import registry
-    from elastic_freight_spark.streaming.structured import stream_scd2_history
-
-    paths, schema, batch = chunked_events
-    base = tmp_path_factory.mktemp("scd2_endurance")
-    src = str(base / "src")
-    ckpt = str(base / "ckpt")
-    out = str(base / "updates")
-    _os.makedirs(src)
-    t0 = _time.time() - 86_400
-
-    def _stage(chunk_paths, offset):
-        for i, p in enumerate(chunk_paths):
-            dst = _os.path.join(src, _os.path.basename(p))
-            _shutil.copy(p, dst)
-            _os.utime(dst, (t0 + offset + i, t0 + offset + i))
-
-    def _sink(batch_df, batch_id):
-        batch_df.write.mode("append").parquet(out)
-
-    def _run():
-        stream = read_parquet_stream(spark, src, schema, max_files_per_trigger=1)
-        q = (
-            stream_scd2_history(stream)
-            .writeStream.foreachBatch(_sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    _stage(paths[: N_ENDURANCE_CHUNKS // 2], 0)
-    _run()
-    _stage(paths[N_ENDURANCE_CHUNKS // 2 :], 1000)
-    _run()
-
-    closed = set()
-    open_latest = {}
-    for r in spark.read.parquet(out).collect():
-        row = (r["user_id"], r["state"], r["valid_from_us"], r["valid_to_us"])
-        if r["is_current"] == 0:
-            closed.add(row)
-        else:
-            prev = open_latest.get(r["user_id"])
-            if prev is None or r["valid_from_us"] >= prev[2]:
-                open_latest[r["user_id"]] = row
-    registry.load_all()
-    batch_closed = set()
-    batch_open = {}
-    for r in registry.QUERIES["index_scd2_history"](spark, SF_DIR).collect():
-        row = (r["user_id"], r["state"], r["valid_from_us"], r["valid_to_us"])
-        if r["is_current"] == 0:
-            batch_closed.add(row)
-        else:
-            batch_open[r["user_id"]] = row
-    assert closed == batch_closed
-    assert open_latest == batch_open
-
-
 def test_stream_dedup_endurance_restart(spark, chunked_events, tmp_path_factory):
     """24 in-order micro-batches through stateful dropDuplicates with a
     forced restart after 12 (same checkpoint): keys first seen before
@@ -2072,7 +543,7 @@ def test_stream_dedup_endurance_restart(spark, chunked_events, tmp_path_factory)
     double if dedup state isn't restored. The appended output must hold
     each (user_id, event_type) once, matching the batch distinct set.
     Watermark 2400h keeps all state live across the fixture's ~30-day
-    event-time span (the interval-join tests' rationale)."""
+    event-time span."""
     import os as _os
     import shutil as _shutil
     import time as _time
