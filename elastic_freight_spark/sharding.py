@@ -14,7 +14,9 @@ Three implementations, fastest first:
 * :func:`shard_col` — Spark's built-in ``hash`` (Murmur3 x86_32, seed
   42) + ``pmod``. Identical distribution guarantees, different
   constant. JVM-side, whole-stage-codegen'd; the default for every
-  internal pipeline.
+  internal pipeline. Its lookup side, :func:`spark_shard`, ports the
+  same hash to Python for one key, so a point lookup routes with no
+  Spark job.
 * :func:`lcg_shard_col` — a Lehmer LCG on integer keys built from
   pure arithmetic (``pmod``/multiply), so the *identical* expression
   runs on any ANSI SQL engine. Used for the DuckDB-oracle correctness
@@ -27,9 +29,10 @@ Three implementations, fastest first:
 Also: shard-pruned lookup support. The reference's only query-side
 logic is ``getPossibleRoutingHashes`` (ElasticsearchRoutingStrategyV5
 .java:97-113): given a doc id, the subset of shards that may contain
-it. With routing == doc id that subset is exactly one shard; in
-Spark, filtering on the ``shard`` partition column makes the scan skip
-every other partition directory (partition pruning).
+it. With routing == doc id that subset is exactly one shard, computed
+in the driver (:func:`spark_shard`, :func:`es_shard` or the LCG
+arithmetic); ``indexer.read_shard`` then reads only that shard's
+directory.
 """
 
 from __future__ import annotations
@@ -60,6 +63,50 @@ def shard_col(col: Column | str, num_shards: int) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.pmod(F.hash(c), F.lit(num_shards)).cast(IntegerType())
+
+
+#: Seed of Spark's ``hash()`` (``Murmur3Hash``).
+_SPARK_SEED = 42
+#: Integer types Spark hashes with ``hashInt`` (≤ 32 bits) or ``hashLong``.
+_INT_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
+
+
+def spark_shard(value, dtype, num_shards: int) -> int | None:
+    """The shard :func:`shard_col` gives ``CAST(value AS dtype)``,
+    computed in Python — the lookup side of the default routing, so a
+    point lookup routes with no Spark job.
+
+    A port of Spark's ``Murmur3_x86_32`` with seed 42: ``hashInt`` for
+    tinyint, smallint and int; ``hashLong`` for bigint;
+    ``hashUnsafeBytes`` over the UTF-8 bytes for string, whose tail
+    mixes each byte on its own as a *signed* byte (unlike the standard
+    tail in :func:`murmur3_x86_32`). ``dtype`` is a Spark ``DataType``
+    or its ``simpleString()``.
+
+    Returns None where the port does not apply: any other type
+    (a collated string included), a value whose Python type is not the
+    column's (``int`` for the integer types, ``str`` for string), or an
+    integer outside the type's range. Spark must evaluate those.
+    """
+    name = dtype if isinstance(dtype, str) else dtype.simpleString()
+    bits = _INT_BITS.get(name)
+    if bits is not None and isinstance(value, int):
+        if not -(1 << (bits - 1)) <= value < 1 << (bits - 1):
+            return None
+        if bits < 64:
+            h = _fmix(_mix_h1(_SPARK_SEED, _mix_k1(value)), 4)
+        else:
+            h = _mix_h1(_SPARK_SEED, _mix_k1(value))
+            h = _fmix(_mix_h1(h, _mix_k1(value >> 32)), 8)
+    elif name == "string" and isinstance(value, str):
+        data = value.encode("utf-8")
+        h = _hash_blocks(data, _SPARK_SEED)
+        for b in data[len(data) - len(data) % 4 :]:
+            h = _mix_h1(h, _mix_k1(b - 256 if b > 127 else b))
+        h = _fmix(h, len(data))
+    else:
+        return None
+    return h % num_shards  # Python % of a signed int == Spark's pmod
 
 
 # ---------------------------------------------------------------------------
@@ -101,40 +148,48 @@ def lcg_shard_sql(col_name: str, num_shards: int) -> str:
 # ---------------------------------------------------------------------------
 
 
+_M32 = 0xFFFFFFFF
+
+
+def _mix_k1(k: int) -> int:
+    k = (k * 0xCC9E2D51) & _M32
+    k = ((k << 15) | (k >> 17)) & _M32
+    return (k * 0x1B873593) & _M32
+
+
+def _mix_h1(h: int, k: int) -> int:
+    h ^= k
+    h = ((h << 13) | (h >> 19)) & _M32
+    return (h * 5 + 0xE6546B64) & _M32
+
+
+def _fmix(h: int, length: int) -> int:
+    """Final avalanche; returns the *signed* 32-bit result, as Java's
+    ``int`` does."""
+    h ^= length
+    h ^= h >> 16
+    h = (h * 0x85EBCA6B) & _M32
+    h ^= h >> 13
+    h = (h * 0xC2B2AE35) & _M32
+    h ^= h >> 16
+    return h - 0x100000000 if h & 0x80000000 else h
+
+
+def _hash_blocks(data: bytes, h: int) -> int:
+    """Mix every whole little-endian 4-byte block of ``data`` into ``h``."""
+    for i in range(0, len(data) - len(data) % 4, 4):
+        h = _mix_h1(h, _mix_k1(int.from_bytes(data[i : i + 4], "little")))
+    return h
+
+
 def murmur3_x86_32(data: bytes, seed: int = 0) -> int:
     """Pure-Python MurmurHash3 x86_32. Returns a *signed* 32-bit int,
     matching Java/Lucene's ``StringHelper.murmurhash3_x86_32``."""
-    c1, c2 = 0xCC9E2D51, 0x1B873593
-    h = seed & 0xFFFFFFFF
-    length = len(data)
-    nblocks = length // 4
-    for i in range(nblocks):
-        k = int.from_bytes(data[i * 4 : i * 4 + 4], "little")
-        k = (k * c1) & 0xFFFFFFFF
-        k = ((k << 15) | (k >> 17)) & 0xFFFFFFFF
-        k = (k * c2) & 0xFFFFFFFF
-        h ^= k
-        h = ((h << 13) | (h >> 19)) & 0xFFFFFFFF
-        h = (h * 5 + 0xE6546B64) & 0xFFFFFFFF
-    tail = data[nblocks * 4 :]
-    k = 0
-    if len(tail) >= 3:
-        k ^= tail[2] << 16
-    if len(tail) >= 2:
-        k ^= tail[1] << 8
-    if len(tail) >= 1:
-        k ^= tail[0]
-        k = (k * c1) & 0xFFFFFFFF
-        k = ((k << 15) | (k >> 17)) & 0xFFFFFFFF
-        k = (k * c2) & 0xFFFFFFFF
-        h ^= k
-    h ^= length
-    h ^= h >> 16
-    h = (h * 0x85EBCA6B) & 0xFFFFFFFF
-    h ^= h >> 13
-    h = (h * 0xC2B2AE35) & 0xFFFFFFFF
-    h ^= h >> 16
-    return h - 0x100000000 if h & 0x80000000 else h
+    h = _hash_blocks(data, seed & _M32)
+    tail = data[len(data) - len(data) % 4 :]
+    if tail:
+        h ^= _mix_k1(int.from_bytes(tail, "little"))
+    return _fmix(h, len(data))
 
 
 def es_routing_hash(routing: str) -> int:

@@ -189,9 +189,11 @@ def finalize_stream_index(spark: SparkSession, cfg: IndexConfig) -> dict:
         with open(sidecar) as f:
             failed = sum(json.load(f).values())
 
+    schema = {}
     try:
-        schema = spark.read.parquet(dest).drop("shard").schema
-        filled = _fill_missing_shards(spark, schema, dest, cfg, shard_counts)
+        written = spark.read.parquet(dest)
+        filled = _fill_missing_shards(spark, written.drop("shard").schema, dest, cfg, shard_counts)
+        schema["schema"] = written.schema.jsonValue()
     except AnalysisException:
         # zero rows committed → no parquet files to infer a schema
         # from, so placeholder shards can't be typed; still emit a
@@ -208,6 +210,7 @@ def finalize_stream_index(spark: SparkSession, cfg: IndexConfig) -> dict:
         "shards": shard_counts,
         "missing_shards_filled": filled,
         "streamed": True,
+        **schema,
     }
     os.makedirs(dest, exist_ok=True)
     _write_manifest(dest, manifest)

@@ -2,9 +2,10 @@
 (_prev_bench): prefer the full per-query archives, fall back to
 parseable driver records, skip crash records. No SparkSession involved."""
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 

@@ -104,7 +104,7 @@ def test_cli_works_from_foreign_cwd(tmp_path):
     import subprocess
     import sys
 
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = dict(os.environ, PYTHONPATH=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     out = subprocess.run(
         [sys.executable, "-m", "elastic_freight_spark", "query", "list"],
         cwd=str(tmp_path),

@@ -227,9 +227,10 @@ def test_dist_rank_plan_has_no_unpartitioned_window(spark):
     buckets in dist_rank_unique and on the value/bucket columns in
     dist_rank's tie machinery) or runs over the #buckets frame only."""
     import importlib.util
+    import os
 
     spec = importlib.util.spec_from_file_location(
-        "plan_audit", "/root/repo/tools/plan_audit.py"
+        "plan_audit", os.path.join(os.path.dirname(__file__), "..", "tools", "plan_audit.py")
     )
     pa = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(pa)

@@ -1082,3 +1082,136 @@ def test_vacuum_preserves_time_travel_within_retention(
     assert all(
         asof1_after[u] == asof3_before[u] for u in asof1_after
     )  # odd users never changed across versions
+
+
+# --- lookups read one shard directory; counts come from the write job ------
+
+
+def _spark_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the
+    Spark jobs it ran."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _small_index(spark, out, n_docs=40, num_shards=4):
+    df = spark.createDataFrame(
+        [(i, f"p{i}") for i in range(n_docs)], "doc_id bigint, payload string"
+    )
+    return df, build_index(df, IndexConfig("small", "doc_id", num_shards, out))
+
+
+def test_lookup_of_filled_empty_shard_runs_no_job(spark, tmp_path_factory):
+    """An id routed to a shard the missing-shard fill created returns 0
+    rows without raising, and the lookup runs no Spark job before its
+    collect (routing in Python, schema from the manifest)."""
+    from elastic_freight_spark.sharding import spark_shard
+
+    out = str(tmp_path_factory.mktemp("empty_shard"))
+    _, man = _small_index(spark, out, n_docs=2, num_shards=16)
+    empty = set(man["missing_shards_filled"])
+    doc_id = next(i for i in range(100, 10_000) if spark_shard(i, "bigint", 16) in empty)
+    lookup, jobs = _spark_jobs(spark, lambda: read_shard(spark, man["path"], doc_id))
+    assert jobs == []
+    assert lookup.collect() == []
+    assert [r["doc_id"] for r in read_shard(spark, man["path"], 1).collect()] == [1]
+
+
+def test_lookup_without_recorded_schema_still_serves(spark, tmp_path_factory):
+    """A manifest written before the schema was recorded (no ``schema``
+    key) falls back to inference and serves the same rows."""
+    out = str(tmp_path_factory.mktemp("legacy_manifest"))
+    _, man = _small_index(spark, out)
+    with_schema = [read_shard(spark, man["path"], i).collect() for i in (0, 7, 39, 99)]
+    path = os.path.join(man["path"], "_manifest.json")
+    legacy = {k: v for k, v in read_manifest(man["path"]).items() if k != "schema"}
+    with open(path, "w") as f:
+        json.dump(legacy, f)
+    assert [read_shard(spark, man["path"], i).collect() for i in (0, 7, 39, 99)] == with_schema
+    assert [len(rows) for rows in with_schema] == [1, 1, 1, 0]
+
+
+def test_vacuum_keeps_manifest_shard_counts_true(spark, tmp_path_factory):
+    """Upserts keep the manifest's shard counts as a running total;
+    a vacuum that deletes superseded delta files must recount them."""
+    from elastic_freight_spark.indexer import apply_vacuum, upsert_index
+
+    out = str(tmp_path_factory.mktemp("vac_counts"))
+    df, man = _small_index(spark, out)
+    upd = df.filter(F.col("doc_id") < 10)
+    upsert_index(upd, man["path"])
+    man2 = upsert_index(upd.withColumn("payload", F.lit("v2")), man["path"])
+    assert sum(man2["shards"].values()) == 60
+    man3 = apply_vacuum(spark, man["path"], keep_versions=0)
+    assert man3["vacuum_files_removed"] > 0
+    physical = {
+        str(r["shard"]): r["count"]
+        for r in spark.read.parquet(man["path"]).groupBy("shard").count().collect()
+    }
+    assert {s: c for s, c in read_manifest(man["path"])["shards"].items() if c} == physical
+    assert sum(physical.values()) == spark.read.parquet(man["path"]).count() < 60
+
+
+def test_lookup_columns_after_upsert_compaction(spark, tmp_path_factory):
+    """The schema an upsert records carries ``_version``/``_op``;
+    compacting the log records the clean schema again, so a lookup
+    shows the same columns as a plain read."""
+    from elastic_freight_spark.indexer import compact_index_upserts, upsert_index
+
+    out = str(tmp_path_factory.mktemp("compact_cols"))
+    df, man = _small_index(spark, out)
+    upsert_index(df.filter(F.col("doc_id") == 3).withColumn("payload", F.lit("new")), man["path"])
+    [row] = read_shard(spark, man["path"], 3).filter(F.col("_version") == 1).collect()
+    assert (row["payload"], row["_op"]) == ("new", "u")
+    compact_index_upserts(spark, man["path"])
+    lookup = read_shard(spark, man["path"], 3)
+    assert lookup.columns == read_index(spark, man["path"]).columns
+    assert "_version" not in lookup.columns and "_op" not in lookup.columns
+    assert [r["payload"] for r in lookup.collect()] == ["new"]
+
+
+def test_manifest_write_survives_a_crash(tmp_path, monkeypatch):
+    """A crash while the manifest is being written leaves the previous
+    manifest whole: the write goes to a temp file that replaces it."""
+    from elastic_freight_spark.indexer import _write_manifest
+
+    _write_manifest(str(tmp_path), {"index": "x", "shards": {"0": 5}})
+    before = read_manifest(str(tmp_path))
+
+    def torn(obj, f, **kwargs):
+        f.write('{"index": ')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn)
+    with pytest.raises(OSError):
+        _write_manifest(str(tmp_path), {"index": "x", "shards": {"0": 6}})
+    monkeypatch.undo()
+    assert read_manifest(str(tmp_path)) == before
+
+
+def test_upsert_above_observed_shard_limit_recounts(spark, tmp_path_factory, monkeypatch):
+    """Above the observed-counts shard limit an upsert recounts the
+    files instead; both paths leave the same true shard counts."""
+    from elastic_freight_spark import indexer
+
+    out = str(tmp_path_factory.mktemp("recount"))
+    df, man = _small_index(spark, out)
+    observed = indexer.upsert_index(df.filter(F.col("doc_id") < 10), man["path"])["shards"]
+    monkeypatch.setattr(indexer, "_OBSERVED_COUNTS_MAX_SHARDS", 2)
+    recounted = indexer.upsert_index(df.filter(F.col("doc_id") < 10), man["path"])["shards"]
+    physical = {
+        str(r["shard"]): r["count"]
+        for r in spark.read.parquet(man["path"]).groupBy("shard").count().collect()
+    }
+    assert recounted == physical
+    # the same batch twice: the observed path added what the recount finds
+    assert recounted == {s: 2 * c - man["shards"][s] for s, c in observed.items()}
+    assert sum(recounted.values()) == 60

@@ -10,7 +10,7 @@ import shutil
 import subprocess
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TOOL = os.path.join(REPO, "tools", "update_ledger.py")
 REAL = os.path.join(REPO, "CORRECTNESS_LEDGER.md")
 

@@ -2,6 +2,8 @@
 — pushdown, pruning, broadcast, partition pruning, codegen, JVM-only
 hot paths — asserted on real query plans, not assumed."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -362,7 +364,7 @@ def test_plan_audit_unpartitioned_window_parser():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "plan_audit", "/root/repo/tools/plan_audit.py"
+        "plan_audit", os.path.join(os.path.dirname(__file__), "..", "tools", "plan_audit.py")
     )
     pa = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(pa)

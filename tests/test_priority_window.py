@@ -3,9 +3,11 @@
 query (a rows-only or unknown name burns a slot on a guaranteed
 non-green row — the round-4 judge finding), the window must be full,
 and the registry must actually serve it front-to-back. No Spark."""
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from elastic_freight_spark import registry
 
@@ -33,7 +35,7 @@ def test_ledger_covers_registry_and_vice_versa():
     registry/ledger mismatch silently mis-ranks the window."""
     import re
 
-    txt = open("/root/repo/CORRECTNESS_LEDGER.md").read()
+    txt = open(os.path.join(REPO, "CORRECTNESS_LEDGER.md")).read()
     ledger = {
         q
         for q, _, _ in re.findall(

@@ -12,9 +12,11 @@
    pass: before round 10 a green EFS_ONLY run printed the same
    total/failed=[] shape as a full pass in the ~2 KB tail capture.
 """
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def test_salt_text_commutes_with_lowercasing(spark):
@@ -215,7 +217,7 @@ def test_drive_contract_summary_reports_subset_visibility():
     JSON printed by tools/drive_contract.py must carry ran/skipped/
     efs_skip/efs_only alongside total/failed, so a green subset run
     can't be mistaken for a full pass in the driver tail capture."""
-    src = open("/root/repo/tools/drive_contract.py").read()
+    src = open(os.path.join(REPO, "tools", "drive_contract.py")).read()
     for key in ('"total"', '"ran"', '"skipped"', '"efs_skip"',
                 '"efs_only"', '"oracled"', '"failed"'):
         assert key in src, key

@@ -16,9 +16,8 @@ import re
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
-
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 # --- the LSH-bucketed embedding near-dup twin ------------------------------

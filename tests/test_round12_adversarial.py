@@ -18,11 +18,12 @@
    negative zero) and type equality with F.lit's nested form; NaN and
    ±inf raise instead of reaching Spark's parser.
 """
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
 

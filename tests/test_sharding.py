@@ -229,3 +229,77 @@ def test_pandas_udaf_geomean_matches_jvm_identity(spark):
     assert set(got) == set(want)
     for k in got:
         assert abs(got[k] - want[k]) < 1e-9 * max(1.0, abs(want[k]))
+
+
+# --- spark_shard: the driver-side twin of shard_col ------------------------
+
+_INT_RANGE = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
+
+
+def _jvm_shards(spark, dtype, values, n):
+    """shard_col over ``values`` typed as ``dtype`` — ONE Spark job."""
+    df = spark.createDataFrame([(v,) for v in values], f"v {dtype}")
+    return [r[0] for r in df.select(shard_col("v", n)).collect()]
+
+
+def _values(dtype):
+    if dtype == "string":
+        return st.text(max_size=12)
+    half = 1 << (_INT_RANGE[dtype] - 1)
+    return st.integers(min_value=-half, max_value=half - 1)
+
+
+@given(
+    data=st.data(),
+    dtype=st.sampled_from(["tinyint", "smallint", "int", "bigint", "string"]),
+    n=st.sampled_from([1, 3, 8, 16, 512]),
+)
+@settings(max_examples=25, deadline=None)
+def test_spark_shard_matches_shard_col(spark, data, dtype, n):
+    """The pure-Python Murmur3 port routes every value to the shard
+    Spark's ``hash`` + ``pmod`` does, for each of the five doc-id
+    types a lookup routes without a Spark job."""
+    from elastic_freight_spark.sharding import spark_shard
+
+    values = data.draw(st.lists(_values(dtype), min_size=1, max_size=200))
+    expected = _jvm_shards(spark, dtype, values, n)
+    assert [spark_shard(v, dtype, n) for v in values] == expected
+
+
+_EDGE_VALUES = {
+    # empty, 1-3-byte tails of bytes >= 0x80 (hashed as signed bytes),
+    # whole blocks plus tails, and 4-byte code points (surrogate pairs
+    # in the JVM's UTF-16 strings)
+    "string": ["", "\x80", "é", "€", "aé", "abcé", "abcd€", "😀", "a😀", "😀😀é", "\U0010ffff"],
+    "int": [0, 1, -1, 7, -7, -(2**31), 2**31 - 1],
+    "bigint": [0, 1, -1, 7, -7, -(2**31), 2**31 - 1, 2**31, -(2**63), 2**63 - 1],
+    "smallint": [0, -1, -(2**15), 2**15 - 1],
+    "tinyint": [0, -1, -128, 127],
+}
+
+
+@pytest.mark.parametrize("dtype", sorted(_EDGE_VALUES))
+def test_spark_shard_edge_cases(spark, dtype):
+    from elastic_freight_spark.sharding import spark_shard
+
+    values = _EDGE_VALUES[dtype]
+    for n in (8, 16):
+        assert [spark_shard(v, dtype, n) for v in values] == _jvm_shards(spark, dtype, values, n)
+
+
+def test_spark_shard_is_type_sensitive_and_declines_what_it_cannot_port():
+    from pyspark.sql.types import DoubleType, IntegerType, LongType
+
+    from elastic_freight_spark.sharding import spark_shard
+
+    # int and bigint of the same value hash differently (hashInt vs
+    # hashLong) — at least one of these values must route apart
+    assert any(spark_shard(v, "int", 512) != spark_shard(v, "bigint", 512) for v in range(8))
+    assert spark_shard(7, IntegerType(), 16) == spark_shard(7, "int", 16)
+    assert spark_shard(7, LongType(), 16) == spark_shard(7, "bigint", 16)
+    # left to Spark: other types, a key of another Python type, overflow
+    assert spark_shard(1.5, DoubleType(), 8) is None
+    assert spark_shard("7", "int", 8) is None
+    assert spark_shard(7, "string", 8) is None
+    assert spark_shard(2**31, "int", 8) is None
+    assert spark_shard(128, "tinyint", 8) is None

@@ -1,7 +1,7 @@
 """Vanilla-driver contract check: fresh SparkSession with ONLY the
 driver's configs, every registered query vs its DuckDB oracle."""
 import hashlib, os, sys, json
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd

@@ -30,9 +30,10 @@ Known-full-width reads are allowlisted with the reason inline.
 """
 import json
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from elastic_freight_spark.session import get_spark, load_tables
 
 SF_DIR = "/root/testdata/sf0.01"

@@ -15,7 +15,7 @@ plan. The salted replica scales VOLUME 100x at realistic duplicate
 density so the text-dedup tier's oracles can run at 100x; copy 0 is
 the identity map, so the original corpus survives verbatim."""
 import os, sys, shutil
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 COPIES = int(os.environ.get("REPLICATE_COPIES", "10"))

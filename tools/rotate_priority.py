@@ -15,9 +15,11 @@ r{N-1}` (a rows-only->hash oracle promotion still resets its row to
 list into registry._PRIORITY. Do NOT rotate mid-round.
 """
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 ORDER = {"never": -1, "J3": -1}
 
@@ -35,7 +37,7 @@ def main() -> None:
     registry.load_all()
     rows = re.findall(
         r"^\| (\S+) \| (\S+) \| (\S+) \|",
-        open("/root/repo/CORRECTNESS_LEDGER.md").read(),
+        open(os.path.join(REPO, "CORRECTNESS_LEDGER.md")).read(),
         flags=re.M,
     )
     ledger = {q: tag for q, _, tag in rows if q != "query"}

@@ -8,7 +8,7 @@ judge directive). Set SWEEP_INCLUDE_AUDIT=1 to time them anyway at
 small SF.
 """
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from elastic_freight_spark.session import get_spark, load_tables
 
 # Queries whose cost is quadratic in hot-key fan-out BY DESIGN

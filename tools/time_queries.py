@@ -1,7 +1,7 @@
 """Time round-4 queries at sf0.1 vs the 10x replica, cold caches both
 sides (fresh process per SF dir: pass the dir as argv[1])."""
-import json, sys, time
-sys.path.insert(0, "/root/repo")
+import json, os, sys, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from elastic_freight_spark.session import get_spark, load_tables
 
 sf_dir = sys.argv[1]

@@ -12,11 +12,12 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # overridable for tests (tests/test_ledger_tools.py folds a fake
 # results file into a COPY of the real ledger)
-LEDGER = os.environ.get("EFS_LEDGER_PATH", "/root/repo/CORRECTNESS_LEDGER.md")
+LEDGER = os.environ.get("EFS_LEDGER_PATH", os.path.join(REPO, "CORRECTNESS_LEDGER.md"))
 
 
 def main() -> None:
