@@ -265,6 +265,8 @@ def _write_manifest(dest: str, manifest: dict) -> None:
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
+        f.flush()
+        os.fsync(f.fileno())
     os.replace(tmp, path)
 
 
@@ -351,14 +353,6 @@ def read_shard(spark: SparkSession, index_path: str, doc_id) -> DataFrame:
 UPSERT_VERSION_COL = "_version"
 UPSERT_OP_COL = "_op"
 
-#: Up to this many shards an upsert observes one ``count_if`` per shard
-#: on its write job; above it, it recounts the index's files instead.
-#: Each observed count costs the write job time (a 60-row batch on a
-#: fresh 4-core local index: 523 vs 577 ms for the recount at 16 shards,
-#: 746 vs 694 ms at 32, 13.8 vs 3.8 s at 512).
-_OBSERVED_COUNTS_MAX_SHARDS = 16
-
-
 def upsert_index(df: DataFrame, index_path: str, delete: bool = False) -> dict:
     """Append an upsert (or tombstone) batch to a built index.
 
@@ -370,11 +364,9 @@ def upsert_index(df: DataFrame, index_path: str, delete: bool = False) -> dict:
     shard-route → repartition → partitioned append as the base build
     — a delta never rewrites the base. Its new columns (``_version``,
     ``_op`` and any evolved column) are added to the manifest's schema.
-    Up to 16 shards (``_OBSERVED_COUNTS_MAX_SHARDS``) it reads nothing
-    of the index: the batch's per-shard row counts are observed on its
-    own write job and added to ``manifest['shards']``. Above that it
-    recounts the index's files after the write."""
-    spark = df.sparkSession
+    It reads nothing of the index: the batch's per-shard row counts
+    are observed on its own write job and added to
+    ``manifest['shards']``."""
     manifest = read_manifest(index_path)
     version = int(manifest.get("version", 0)) + 1
     cfg = IndexConfig(
@@ -391,12 +383,10 @@ def upsert_index(df: DataFrame, index_path: str, delete: bool = False) -> dict:
         .withColumn("shard", shard_expr(cfg))
         .repartition(cfg.num_shards, F.col("shard"))
     )
-    observe = cfg.num_shards <= _OBSERVED_COUNTS_MAX_SHARDS
-    if observe:
-        obs = Observation(f"upsert_{cfg.index_name}")
-        stamped = stamped.observe(
-            obs, *[F.count_if(F.col("shard") == i).alias(str(i)) for i in range(cfg.num_shards)]
-        )
+    obs = Observation(f"upsert_{cfg.index_name}")
+    stamped = stamped.observe(
+        obs, *[F.count_if(F.col("shard") == i).alias(str(i)) for i in range(cfg.num_shards)]
+    )
     (
         stamped.write.mode("append")
         .option("maxRecordsPerFile", cfg.max_records_per_file)
@@ -404,12 +394,9 @@ def upsert_index(df: DataFrame, index_path: str, delete: bool = False) -> dict:
         .parquet(index_path)
     )
     manifest["version"] = version
-    if observe:
-        shards = manifest["shards"]
-        for shard, docs in obs.get.items():
-            shards[shard] = shards.get(shard, 0) + int(docs)
-    else:
-        manifest["shards"] = _recount_shards(spark, index_path, manifest)
+    shards = manifest["shards"]
+    for shard, docs in obs.get.items():
+        shards[shard] = shards.get(shard, 0) + int(docs)
     if "schema" in manifest:
         known = StructType.fromJson(manifest["schema"])
         new = [f for f in stamped.schema if f.name not in known.fieldNames()]

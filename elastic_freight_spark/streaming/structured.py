@@ -189,11 +189,11 @@ def finalize_stream_index(spark: SparkSession, cfg: IndexConfig) -> dict:
         with open(sidecar) as f:
             failed = sum(json.load(f).values())
 
-    schema = {}
+    schema = None
     try:
         written = spark.read.parquet(dest)
         filled = _fill_missing_shards(spark, written.drop("shard").schema, dest, cfg, shard_counts)
-        schema["schema"] = written.schema.jsonValue()
+        schema = written.schema.jsonValue()
     except AnalysisException:
         # zero rows committed → no parquet files to infer a schema
         # from, so placeholder shards can't be typed; still emit a
@@ -210,8 +210,9 @@ def finalize_stream_index(spark: SparkSession, cfg: IndexConfig) -> dict:
         "shards": shard_counts,
         "missing_shards_filled": filled,
         "streamed": True,
-        **schema,
     }
+    if schema is not None:
+        manifest["schema"] = schema
     os.makedirs(dest, exist_ok=True)
     _write_manifest(dest, manifest)
     return manifest

@@ -1195,23 +1195,3 @@ def test_manifest_write_survives_a_crash(tmp_path, monkeypatch):
         _write_manifest(str(tmp_path), {"index": "x", "shards": {"0": 6}})
     monkeypatch.undo()
     assert read_manifest(str(tmp_path)) == before
-
-
-def test_upsert_above_observed_shard_limit_recounts(spark, tmp_path_factory, monkeypatch):
-    """Above the observed-counts shard limit an upsert recounts the
-    files instead; both paths leave the same true shard counts."""
-    from elastic_freight_spark import indexer
-
-    out = str(tmp_path_factory.mktemp("recount"))
-    df, man = _small_index(spark, out)
-    observed = indexer.upsert_index(df.filter(F.col("doc_id") < 10), man["path"])["shards"]
-    monkeypatch.setattr(indexer, "_OBSERVED_COUNTS_MAX_SHARDS", 2)
-    recounted = indexer.upsert_index(df.filter(F.col("doc_id") < 10), man["path"])["shards"]
-    physical = {
-        str(r["shard"]): r["count"]
-        for r in spark.read.parquet(man["path"]).groupBy("shard").count().collect()
-    }
-    assert recounted == physical
-    # the same batch twice: the observed path added what the recount finds
-    assert recounted == {s: 2 * c - man["shards"][s] for s, c in observed.items()}
-    assert sum(recounted.values()) == 60
