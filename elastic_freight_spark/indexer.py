@@ -20,17 +20,25 @@ On Spark this collapses to::
 plus a tiny JSON manifest. There is no embedded ES (Parquet is the
 index), no snapshot surgery (the partitioned table IS the snapshot;
 "restore" is ``spark.read.parquet``), and no S3 eventual-consistency
-manifest dance (committer semantics handle atomicity — the reference
-needed fileoutputcommitter v2 for this, hadoop_config.json:15).
+manifest dance.
+
+Every whole index tree — a build, a compaction, a reshard — is
+published the same way (``_publish``): written to ``<path>.compacting``,
+completed there (shard counts, empty placeholder shards, schema,
+manifest), and only then swapped in for the live tree, which survives
+at ``<path>.old`` until the new one is in place. A failed write leaves
+the previous index and manifest untouched; a crash between the two
+renames is undone by ``recover_compact``.
 
 Scale notes (100 TB):
 
 * The shuffle is the single full-data network pass, same as the
   reference's map→reduce shuffle. ``repartition(N, shard)`` gives
   1 write task per shard like the reference's 1-reducer-per-shard;
-  for huge shards pass ``tasks_per_shard > 1`` to write each shard
-  directory from several tasks (still correctly partitioned — the
-  partitionBy column, not task layout, defines placement).
+  for huge shards pass ``tasks_per_shard > 1`` (``compact_index``:
+  ``target_files_per_shard``) to write each shard directory from
+  several tasks (still correctly partitioned — the partitionBy column,
+  not task layout, defines placement).
 * ``maxRecordsPerFile`` bounds file sizes (the analogue of the
   reference's 256 MB max merged segment,
   example/IndexingReducerImpl.java:34-36).
@@ -44,7 +52,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import time
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -102,7 +113,6 @@ class IndexConfig:
     #: (oracle-portable arithmetic), or 'es' (bit-exact ES 5.x parity
     #: via pandas UDF)
     routing: str = "spark"
-    mode: str = "overwrite"
     #: bound output file size — analogue of ES max merged segment
     max_records_per_file: int = 5_000_000
     #: >1 splits each shard across several write tasks (huge shards)
@@ -141,8 +151,9 @@ def build_index(df: DataFrame, cfg: IndexConfig) -> dict:
     partitioned Parquet write, with doc counters observed on the same
     job. Null doc ids are routed out (counted as failures), matching
     the reference's skip-don't-fail policy (BaseESReducer.java:270).
+    The tree is published through ``_publish``: a rebuild whose write
+    fails leaves the previous index and manifest as they were.
     """
-    spark = df.sparkSession
     if cfg.routing == "lcg":
         from pyspark.sql.types import NumericType
 
@@ -160,59 +171,148 @@ def build_index(df: DataFrame, cfg: IndexConfig) -> dict:
     # second scan of the (100 TB) input just for counters
     base = df.observe(obs_in, F.count(F.lit(1)).alias("total"))
     good = base.filter(F.col(cfg.doc_id_col).isNotNull())
-    sharded = good.withColumn("shard", shard_expr(cfg))
-
-    n_parts = cfg.num_shards * max(1, cfg.tasks_per_shard)
-    if cfg.tasks_per_shard > 1:
-        # spread one shard over several tasks: co-partition on
-        # (shard, salt) — placement still comes from partitionBy.
-        salt = F.pmod(F.hash(F.col(cfg.doc_id_col)), F.lit(cfg.tasks_per_shard))
-        sharded = sharded.repartition(n_parts, F.col("shard"), salt)
-    else:
-        sharded = sharded.repartition(cfg.num_shards, F.col("shard"))
-    if cfg.sort_within_shard:
-        sharded = sharded.sortWithinPartitions("shard", *cfg.sort_within_shard)
-
+    sharded = _layout(
+        good.withColumn("shard", shard_expr(cfg)),
+        cfg.num_shards,
+        cfg.doc_id_col,
+        cfg.tasks_per_shard,
+        cfg.sort_within_shard,
+    )
     observed = sharded.observe(obs, F.count(F.lit(1)).alias(COUNTER_DOC_CREATED))
 
-    import time
+    def doc_counters() -> dict:
+        created = int(obs.get[COUNTER_DOC_CREATED])
+        return {
+            COUNTER_DOC_CREATED: created,
+            COUNTER_DOC_FAILED: int(obs_in.get["total"]) - created,
+        }
 
-    dest = os.path.join(cfg.output_path, cfg.index_name)
-    t0 = time.monotonic()
-    (
-        observed.write.mode(cfg.mode)
-        .option("maxRecordsPerFile", cfg.max_records_per_file)
-        .partitionBy("shard")
-        .parquet(dest)
+    manifest = _new_manifest(cfg)
+    return _publish(
+        observed,
+        manifest["path"],
+        manifest,
+        cfg.num_shards,
+        max_records_per_file=cfg.max_records_per_file,
+        counters=doc_counters,
     )
-    t_index = time.monotonic()
 
-    created = int(obs.get[COUNTER_DOC_CREATED])
-    failed = int(obs_in.get["total"]) - created
 
-    shard_counts = _shard_counts(spark, dest)
-    t_manifest = time.monotonic()
-    filled = _fill_missing_shards(spark, df.schema, dest, cfg, shard_counts)
-    t_fill = time.monotonic()
-    manifest = {
+def _new_manifest(cfg: IndexConfig) -> dict:
+    """The manifest fields every index records from its config."""
+    return {
         "index": cfg.index_name,
         "num_shards": cfg.num_shards,
         "doc_id_col": cfg.doc_id_col,
         "routing": cfg.routing,
-        "path": dest,
-        "counters": {
-            COUNTER_DOC_CREATED: created,
-            COUNTER_DOC_FAILED: failed,
-            COUNTER_T_INDEXING: (t_index - t0) * 1000.0,
-            COUNTER_T_MANIFESTING: (t_manifest - t_index) * 1000.0,
-            COUNTER_T_FILLING: (t_fill - t_manifest) * 1000.0,
-        },
-        "shards": shard_counts,
-        "missing_shards_filled": filled,
-        "schema": observed.schema.jsonValue(),
+        "path": os.path.join(cfg.output_path, cfg.index_name),
     }
-    _write_manifest(dest, manifest)
+
+
+def _layout(
+    frame: DataFrame,
+    num_shards: int,
+    doc_id_col: str,
+    tasks_per_shard: int = 1,
+    sort_cols: list[str] | None = None,
+) -> DataFrame:
+    """Lay a frame with a ``shard`` column out for a partitioned write:
+    one write task per shard, or ``tasks_per_shard`` tasks per shard.
+    Repartitioning on the shard alone cannot split a shard (equal keys
+    hash to one partition), so a split co-keys on a deterministic
+    doc-id salt; placement still comes from partitionBy."""
+    if tasks_per_shard > 1:
+        salt = F.pmod(F.hash(F.col(doc_id_col)), F.lit(tasks_per_shard))
+        frame = frame.repartition(num_shards * tasks_per_shard, F.col("shard"), salt)
+    else:
+        frame = frame.repartition(num_shards, F.col("shard"))
+    if sort_cols:
+        frame = frame.sortWithinPartitions("shard", *sort_cols)
+    return frame
+
+
+def _ms_since(t0: float) -> float:
+    return (time.monotonic() - t0) * 1000.0
+
+
+def _publish(
+    frame: DataFrame,
+    dest: str,
+    manifest: dict,
+    num_shards: int,
+    *,
+    max_records_per_file: int = 0,
+    counters: Callable[[], dict] = dict,
+) -> dict:
+    """Write a whole index tree and swap it in at ``dest``; returns the
+    manifest. The one writer of whole trees.
+
+    The laid-out ``frame`` is written with ``partitionBy("shard")`` to
+    ``<dest>.compacting`` and completed there by ``_seal`` (shard
+    counts, placeholder shards, schema, phase times) plus the counters
+    ``counters()`` returns once the write has run (its observations,
+    a caller's own phase time). The manifest is written into the new
+    tree, and only then is the live tree renamed to ``<dest>.old``, the
+    new one to ``<dest>``, and ``.old`` removed. A failed write leaves
+    the live index untouched; a crash between the renames is undone by
+    ``recover_compact``, which also runs first here, so a publish
+    starts from a clean slate."""
+    dest = dest.rstrip("/")
+    staging, old = dest + ".compacting", dest + ".old"
+    recover_compact(dest)
+    t0 = time.monotonic()
+    (
+        frame.write.mode("overwrite")
+        .option("maxRecordsPerFile", max_records_per_file)
+        .partitionBy("shard")
+        .parquet(staging)
+    )
+    manifest["counters"] = {
+        **manifest.get("counters", {}),
+        COUNTER_T_INDEXING: _ms_since(t0),
+        **counters(),
+    }
+    _seal(frame.sparkSession, staging, manifest, num_shards, frame.schema)
+    _write_manifest(staging, manifest)
+
+    live = os.path.exists(dest)
+    if live:
+        os.rename(dest, old)
+    os.rename(staging, dest)
+    if live:
+        shutil.rmtree(old)
     return manifest
+
+
+def _seal(
+    spark: SparkSession,
+    tree: str,
+    manifest: dict,
+    num_shards: int,
+    schema: StructType | None,
+) -> None:
+    """Complete a written tree's manifest, the reference's post-process
+    (IndexingPostProcessor.java:144-246): per-shard counts read back
+    from the files, an empty directory for every shard that got no
+    rows, the schema, and the time each took. ``schema`` (the tree's,
+    ``shard`` included) types the placeholders; without one (nothing
+    was ever written) no shard is filled. The caller writes the
+    manifest."""
+    t0 = time.monotonic()
+    shards = _shard_counts(spark, tree)
+    t_counted = _ms_since(t0)
+    manifest["missing_shards_filled"] = (
+        [] if schema is None else _fill_missing_shards(spark, schema, tree, num_shards, shards)
+    )
+    manifest["shards"] = shards
+    if schema is not None:
+        manifest["schema"] = schema.jsonValue()
+    manifest.setdefault("counters", {}).update(
+        {
+            COUNTER_T_MANIFESTING: t_counted,
+            COUNTER_T_FILLING: _ms_since(t0) - t_counted,
+        }
+    )
 
 
 def _shard_counts(spark: SparkSession, dest: str) -> dict[str, int]:
@@ -241,33 +341,46 @@ def _recount_shards(spark: SparkSession, index_path: str, manifest: dict) -> dic
     return {**dict.fromkeys(manifest["shards"], 0), **_shard_counts(spark, index_path)}
 
 
-def _fill_missing_shards(spark, schema, dest, cfg, shard_counts) -> list[int]:
+def _fill_missing_shards(spark, schema, dest, num_shards, shard_counts) -> list[int]:
     """The reference's ``placeMissingShards`` (BaseTransport.java:
     144-167): an index restore requires all N shards to exist even if
     some got zero documents. Here: write an empty parquet directory
     for each absent shard id (expected-minus-produced — the anti-join
-    the reference does over its manifest)."""
-    produced = {int(s) for s in shard_counts}
-    missing = sorted(set(range(cfg.num_shards)) - produced)
+    the reference does over its manifest). The only writer of
+    placeholder shards."""
+    missing = sorted(set(range(num_shards)) - {int(s) for s in shard_counts})
     if missing:
-        empty = spark.createDataFrame([], schema)
+        data = StructType([f for f in schema if f.name != "shard"])
+        empty = spark.createDataFrame([], data)
         for shard_id in missing:
             empty.write.mode("overwrite").parquet(os.path.join(dest, f"shard={shard_id}"))
             shard_counts[str(shard_id)] = 0
     return missing
 
 
-def _write_manifest(dest: str, manifest: dict) -> None:
-    """Write to a temp name, then ``os.replace`` it over the manifest
-    (as ``set_alias`` does): a crash mid-write leaves the previous
-    manifest whole, and every lookup reads it."""
-    path = os.path.join(dest, MANIFEST_NAME)
+def _write_json(path: str, obj) -> None:
+    """Write to a temp name, fsync it, then ``os.replace`` it over
+    ``path``: a crash mid-write leaves the previous file whole, and
+    every reader reads either it or the new one."""
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=2, sort_keys=True)
+        json.dump(obj, f, indent=2, sort_keys=True)
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
+
+
+def _write_manifest(dest: str, manifest: dict) -> None:
+    _write_json(os.path.join(dest, MANIFEST_NAME), manifest)
+
+
+def _manifest_schema(spark: SparkSession, index_path: str, manifest: dict) -> StructType:
+    """The index's schema (``shard`` included) as its manifest records
+    it; a manifest written before schemas were recorded infers it from
+    the files."""
+    if "schema" in manifest:
+        return StructType.fromJson(manifest["schema"])
+    return spark.read.parquet(index_path).schema
 
 
 def read_manifest(index_path: str) -> dict:
@@ -310,10 +423,7 @@ def read_shard(spark: SparkSession, index_path: str, doc_id) -> DataFrame:
     manifest = read_manifest(index_path)
     n = manifest["num_shards"]
     idc = manifest["doc_id_col"]
-    if "schema" in manifest:
-        schema = StructType.fromJson(manifest["schema"])
-    else:
-        schema = spark.read.parquet(index_path).schema
+    schema = _manifest_schema(spark, index_path, manifest)
     routing = manifest["routing"]
     if routing == "lcg":
         shard_id = ((int(doc_id) % 2147483647) * 48271) % 2147483647 % n
@@ -329,8 +439,8 @@ def read_shard(spark: SparkSession, index_path: str, doc_id) -> DataFrame:
             one = spark.range(1).select(shard_col(F.lit(doc_id).cast(dtype), n).alias("s"))
             shard_id = one.collect()[0]["s"]
     shard_dir = os.path.join(index_path, f"shard={shard_id}")
-    # a shard that holds no rows may have no directory (compaction and
-    # resharding write only non-empty shards): read the index instead
+    # a shard that holds no rows has no directory in a tree written
+    # before every publish filled its empty shards: read the index instead
     df = (
         spark.read.schema(schema)
         .option("basePath", index_path)
@@ -348,7 +458,7 @@ def read_shard(spark: SparkSession, index_path: str, doc_id) -> DataFrame:
 # sharded rows stamped with a monotone ``_version`` (and ``_op`` =
 # 'u'/'d' for tombstones); readers resolve latest-per-doc with one
 # window (merge-on-read); compaction folds the log back to one row per
-# doc (copy-on-write) with the same crash-safe swap as compact_index.
+# doc (copy-on-write) through the same staged publish as every build.
 
 UPSERT_VERSION_COL = "_version"
 UPSERT_OP_COL = "_op"
@@ -377,11 +487,12 @@ def upsert_index(df: DataFrame, index_path: str, delete: bool = False) -> dict:
         routing=manifest["routing"],
     )
     good = df.filter(F.col(cfg.doc_id_col).isNotNull())
-    stamped = (
+    stamped = _layout(
         good.withColumn(UPSERT_VERSION_COL, F.lit(version).cast("long"))
         .withColumn(UPSERT_OP_COL, F.lit("d" if delete else "u"))
-        .withColumn("shard", shard_expr(cfg))
-        .repartition(cfg.num_shards, F.col("shard"))
+        .withColumn("shard", shard_expr(cfg)),
+        cfg.num_shards,
+        cfg.doc_id_col,
     )
     obs = Observation(f"upsert_{cfg.index_name}")
     stamped = stamped.observe(
@@ -413,24 +524,7 @@ def read_index_latest(spark: SparkSession, index_path: str) -> DataFrame:
     Cost shape: ONE window shuffle on the doc id over base+delta —
     the read-side price of merge-on-read; run
     ``compact_index_upserts`` to pay it once instead of per query."""
-    manifest = read_manifest(index_path)
-    df = spark.read.option("mergeSchema", "true").parquet(index_path)
-    if UPSERT_VERSION_COL not in df.columns:
-        return df
-    from pyspark.sql import Window as W
-
-    idc = manifest["doc_id_col"]
-    resolved = (
-        df.withColumn("_v", F.coalesce(F.col(UPSERT_VERSION_COL), F.lit(0)))
-        .withColumn(
-            "_rn",
-            F.row_number().over(W.partitionBy(idc).orderBy(F.col("_v").desc())),
-        )
-        .filter(F.col("_rn") == 1)
-        .filter(F.coalesce(F.col(UPSERT_OP_COL), F.lit("u")) != "d")
-        .drop("_v", "_rn")
-    )
-    return resolved
+    return _merge_on_read(spark, index_path)
 
 
 def read_index_asof(
@@ -449,26 +543,33 @@ def read_index_asof(
     — IndexingPostProcessor.java:225-238 writes the manifest of
     restorable indexes); the upsert log generalizes it from
     whole-index granularity to per-batch granularity."""
+    return _merge_on_read(spark, index_path, version)
+
+
+def _merge_on_read(
+    spark: SparkSession, index_path: str, version: int | None = None
+) -> DataFrame:
+    """The one resolver behind ``read_index_latest`` and
+    ``read_index_asof``: newest row per doc id (at or below
+    ``version`` when given), tombstones dropped. An index that was
+    never upserted is returned as read."""
     manifest = read_manifest(index_path)
-    df = spark.read.option("mergeSchema", "true").parquet(index_path)
+    df = read_index(spark, index_path, merge_schema=True)
     if UPSERT_VERSION_COL not in df.columns:
         return df
     from pyspark.sql import Window as W
 
-    idc = manifest["doc_id_col"]
-    # NULL version = base rows (version 0), always in scope. Filter on
-    # the raw column (IsNull OR <=) rather than coalesce() so the
-    # predicate stays parquet-pushable and whole delta files newer
-    # than the fence are skipped by row-group stats.
     vc = F.col(UPSERT_VERSION_COL)
-    fenced = df.filter(vc.isNull() | (vc <= F.lit(int(version)))).withColumn(
-        "_v", F.coalesce(vc, F.lit(0))
-    )
+    if version is not None:
+        # NULL version = base rows (version 0), always in scope. Filter
+        # on the raw column (IsNull OR <=) rather than coalesce() so the
+        # predicate stays parquet-pushable and whole delta files newer
+        # than the fence are skipped by row-group stats.
+        df = df.filter(vc.isNull() | (vc <= F.lit(int(version))))
+    newest = W.partitionBy(manifest["doc_id_col"]).orderBy(F.col("_v").desc())
     return (
-        fenced.withColumn(
-            "_rn",
-            F.row_number().over(W.partitionBy(idc).orderBy(F.col("_v").desc())),
-        )
+        df.withColumn("_v", F.coalesce(vc, F.lit(0)))
+        .withColumn("_rn", F.row_number().over(newest))
         .filter(F.col("_rn") == 1)
         .filter(F.coalesce(F.col(UPSERT_OP_COL), F.lit("u")) != "d")
         .drop("_v", "_rn")
@@ -477,33 +578,19 @@ def read_index_asof(
 
 def compact_index_upserts(spark: SparkSession, index_path: str) -> dict:
     """Copy-on-write compaction of the upsert log: materialize the
-    latest-version view (tombstones dropped), rewrite one clean tree,
-    crash-safe swap (same .compacting/.old discipline as
-    compact_index). After this, plain ``read_index`` equals the
-    merge-on-read view and the per-query window cost is gone."""
+    latest-version view (tombstones dropped) and publish it as one
+    clean tree (``_publish``, the staged swap every build uses). After
+    this, plain ``read_index`` equals the merge-on-read view and the
+    per-query window cost is gone."""
     manifest = read_manifest(index_path)
     latest = read_index_latest(spark, index_path).drop(
         UPSERT_VERSION_COL, UPSERT_OP_COL
     )
-    tmp = index_path.rstrip("/") + ".compacting"
-    (
-        latest.repartition(manifest["num_shards"], F.col("shard"))
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(tmp)
-    )
     manifest["compacted_upserts_through"] = manifest.get("version", 0)
-    manifest["shards"] = _shard_counts(spark, tmp)
-    manifest["schema"] = latest.schema.jsonValue()
-    _write_manifest(tmp, manifest)
-
-    import shutil
-
-    old = index_path.rstrip("/") + ".old"
-    os.rename(index_path, old)
-    os.rename(tmp, index_path)
-    shutil.rmtree(old)
-    return manifest
+    n = manifest["num_shards"]
+    return _publish(
+        _layout(latest, n, manifest["doc_id_col"]), index_path, manifest, n
+    )
 
 
 # --- multi-index catalog (the reference's post-processor surface) ---------
@@ -531,10 +618,14 @@ def merge_manifests(
     Missing-shard fill needs a SparkSession to write empty parquet
     shards; pass ``shard_config`` to *widen* the expected shard count
     beyond what an index's own manifest says (reference semantics:
-    the transport fills up to ShardConfig's count).
+    the transport fills up to ShardConfig's count). An index with
+    missing shards is completed in place by the same ``_seal`` every
+    publish runs (recount, fill typed by the manifest's schema,
+    manifest rewrite).
 
-    Driver-side and metadata-only (reads N small JSON files, writes
-    one) — nothing scans data.
+    Driver-side (reads N small JSON files, writes one) — unless a
+    shard is missing, nothing scans data. The catalog replaces the
+    previous one atomically.
     """
     indices: dict[str, dict] = {}
     for p in index_paths:
@@ -551,26 +642,19 @@ def merge_manifests(
 
     filled: dict[str, list[int]] = {}
     for name, m in sorted(indices.items()):
-        expected = m["num_shards"]
         if shard_config is not None:
-            expected = max(expected, shard_config.shards_for(name))
-            m["num_shards"] = expected
-        missing = sorted(set(range(expected)) - {int(s) for s in m["shards"]})
+            m["num_shards"] = max(m["num_shards"], shard_config.shards_for(name))
+        missing = sorted(set(range(m["num_shards"])) - {int(s) for s in m["shards"]})
         if missing:
             if spark is None:
                 raise ValueError(
                     f"index {name!r} is missing shards {missing}; pass "
                     "spark= so empty placeholder shards can be written"
                 )
-            schema = spark.read.parquet(m["path"]).drop("shard").schema
-            empty = spark.createDataFrame([], schema)
-            for shard_id in missing:
-                empty.write.mode("overwrite").parquet(
-                    os.path.join(m["path"], f"shard={shard_id}")
-                )
-                m["shards"][str(shard_id)] = 0
-            filled[name] = missing
+            schema = _manifest_schema(spark, m["path"], m)
+            _seal(spark, m["path"], m, m["num_shards"], schema)
             _write_manifest(m["path"], m)
+            filled[name] = m["missing_shards_filled"]
 
     catalog = {
         "indices": {
@@ -597,8 +681,7 @@ def merge_manifests(
         "missing_shards_filled": filled,
     }
     os.makedirs(catalog_path, exist_ok=True)
-    with open(os.path.join(catalog_path, CATALOG_NAME), "w") as f:
-        json.dump(catalog, f, indent=2, sort_keys=True)
+    _write_json(os.path.join(catalog_path, CATALOG_NAME), catalog)
     return catalog
 
 
@@ -668,64 +751,40 @@ def compact_index(
     only file layout changes. Run it like the reference runs
     force-merge: once, after load, before serving.
 
-    Crash safety: the compacted tree is fully written — manifest
-    included — at ``<path>.compacting`` BEFORE any rename, and the
-    original survives at ``<path>.old`` until the new tree is in
-    place. A crash can therefore never lose data; the only window is
-    between the two renames (directory swaps can't be atomic
-    together), after which ``recover_compact(index_path)`` restores
-    a readable index: it renames ``.old`` back if the live path is
-    missing, and clears leftovers if the swap completed.
+    The index is read with ``mergeSchema``, so the ``_version``/``_op``
+    columns of pending upserts survive and the merge-on-read view is
+    unchanged. Crash safety is ``_publish``'s: the compacted tree is
+    complete, manifest included, before it replaces the live one.
     """
-    import time
-
     t0 = time.monotonic()
     manifest = read_manifest(index_path)
-    df = spark.read.parquet(index_path)
-    k = max(1, target_files_per_shard)
-    if k == 1:
-        compacted = df.repartition(manifest["num_shards"], F.col("shard"))
-    else:
-        # repartition on shard alone cannot split a shard (equal keys
-        # hash to one partition) — co-key with a deterministic doc-id
-        # salt to spread each shard over k write tasks
-        salt = F.pmod(F.hash(F.col(manifest["doc_id_col"])), F.lit(k))
-        compacted = df.repartition(
-            manifest["num_shards"] * k, F.col("shard"), salt
-        )
-    if sort_cols:
-        compacted = compacted.sortWithinPartitions("shard", *sort_cols)
-    tmp = index_path.rstrip("/") + ".compacting"
-    compacted.write.mode("overwrite").partitionBy("shard").parquet(tmp)
-
-    # complete the new tree (shard counts + manifest) BEFORE swapping,
-    # so whatever directory ends up at index_path is self-describing
+    n = manifest["num_shards"]
+    compacted = _layout(
+        read_index(spark, index_path, merge_schema=True),
+        n,
+        manifest["doc_id_col"],
+        target_files_per_shard,
+        sort_cols,
+    )
     manifest["compacted"] = True
-    manifest["shards"] = _shard_counts(spark, tmp)
-    manifest["schema"] = compacted.schema.jsonValue()
-    manifest.setdefault("counters", {})[COUNTER_T_MERGING] = (
-        time.monotonic() - t0
-    ) * 1000.0
-    _write_manifest(tmp, manifest)
-
-    import shutil
-
-    # swap (same filesystem): old dir out, new dir in; .old is only
-    # deleted after the new tree is live
-    old = index_path.rstrip("/") + ".old"
-    os.rename(index_path, old)
-    os.rename(tmp, index_path)
-    shutil.rmtree(old)
-    return manifest
+    return _publish(
+        compacted,
+        index_path,
+        manifest,
+        n,
+        counters=lambda: {COUNTER_T_MERGING: _ms_since(t0)},
+    )
 
 
 def recover_compact(index_path: str) -> str:
-    """Recover from a crash mid-``compact_index``. Returns what was
-    done: 'ok' (live index present, leftovers cleared), 'restored'
-    (live path was missing — ``.old`` renamed back), or 'missing'
-    (nothing recoverable at this path)."""
-    import shutil
-
+    """Recover from a crash mid-publish: a build, compaction or
+    reshard (``_publish``). Returns what was done: 'ok' (live index
+    present, leftovers cleared — a crash before the swap, mid-build
+    included, leaves the previous index live and only a partial
+    ``.compacting`` tree), 'restored' (a crash between the two renames
+    left the live path missing — ``.old`` renamed back), or 'missing'
+    (nothing recoverable at this path: a first build that never
+    finished; the next publish overwrites its ``.compacting`` tree)."""
     old = index_path.rstrip("/") + ".old"
     tmp = index_path.rstrip("/") + ".compacting"
     if os.path.exists(index_path):
@@ -739,79 +798,6 @@ def recover_compact(index_path: str) -> str:
             shutil.rmtree(tmp)
         return "restored"
     return "missing"
-
-
-# --- range-partitioned layout (alternative to hash sharding) --------------
-
-
-def build_range_index(df: DataFrame, cfg: IndexConfig) -> dict:
-    """Range-partitioned index: shard *i* holds a contiguous doc-id
-    range (boundaries from approxQuantile, stored in the manifest as
-    a zone map).
-
-    Hash sharding (the reference's only layout) optimizes point
-    lookups; a range layout additionally serves *range* scans by
-    pruning shards whose [min,max] cannot overlap — the analogue of
-    ES index sorting / time-based indices. The boundary computation
-    samples (approxQuantile, relativeError 0.001), so the build costs
-    one extra metadata-cheap pass over the doc-id column only.
-    """
-    spark = df.sparkSession
-    good = df.filter(F.col(cfg.doc_id_col).isNotNull())
-    qs = [i / cfg.num_shards for i in range(1, cfg.num_shards)]
-    bounds = good.stat.approxQuantile(cfg.doc_id_col, qs, 0.001)
-
-    shard = F.lit(0)
-    for b in bounds:
-        shard = shard + (F.col(cfg.doc_id_col) > F.lit(b)).cast("int")
-    sharded = good.withColumn("shard", shard).repartition(
-        cfg.num_shards, F.col("shard")
-    )
-    if cfg.sort_within_shard:
-        sharded = sharded.sortWithinPartitions("shard", *cfg.sort_within_shard)
-
-    dest = os.path.join(cfg.output_path, cfg.index_name)
-    (
-        sharded.write.mode(cfg.mode)
-        .option("maxRecordsPerFile", cfg.max_records_per_file)
-        .partitionBy("shard")
-        .parquet(dest)
-    )
-    shard_counts = _shard_counts(spark, dest)
-    manifest = {
-        "index": cfg.index_name,
-        "num_shards": cfg.num_shards,
-        "doc_id_col": cfg.doc_id_col,
-        "routing": "range",
-        "range_bounds": bounds,
-        "path": dest,
-        "shards": shard_counts,
-        "missing_shards_filled": _fill_missing_shards(
-            spark, df.schema, dest, cfg, shard_counts
-        ),
-        "schema": sharded.schema.jsonValue(),
-    }
-    _write_manifest(dest, manifest)
-    return manifest
-
-
-def read_doc_range(spark: SparkSession, index_path: str, lo, hi) -> DataFrame:
-    """Range scan with shard pruning: only shards whose doc range can
-    intersect [lo, hi] are listed/read (partition filter on the shard
-    column + pushed doc-id range predicate)."""
-    manifest = read_manifest(index_path)
-    if manifest.get("routing") != "range":
-        # hash layout: every shard may contain ids in [lo, hi]
-        df = spark.read.parquet(index_path)
-    else:
-        bounds = manifest["range_bounds"]
-        first = sum(1 for b in bounds if lo > b)
-        last = sum(1 for b in bounds if hi > b)
-        df = spark.read.parquet(index_path).filter(
-            F.col("shard").isin(list(range(first, last + 1)))
-        )
-    c = F.col(manifest["doc_id_col"])
-    return df.filter((c >= lo) & (c <= hi))
 
 
 # ---------------------------------------------------------------------------
@@ -831,24 +817,15 @@ def set_alias(base_path: str, alias: str, index_path: str) -> str:
     O(1) regardless of index size, which is what makes rebuild-then-
     swap (blue/green) the zero-downtime publish: build the new index
     under a versioned directory, validate it, then flip."""
-    import json as _json
-    import os as _os
-
-    _os.makedirs(base_path, exist_ok=True)
-    target = _os.path.join(base_path, f"_alias_{alias}.json")
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump({"alias": alias, "index_path": index_path}, f)
-    _os.replace(tmp, target)
+    os.makedirs(base_path, exist_ok=True)
+    target = os.path.join(base_path, f"_alias_{alias}.json")
+    _write_json(target, {"alias": alias, "index_path": index_path})
     return target
 
 
 def resolve_alias(base_path: str, alias: str) -> str:
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(base_path, f"_alias_{alias}.json")) as f:
-        return _json.load(f)["index_path"]
+    with open(os.path.join(base_path, f"_alias_{alias}.json")) as f:
+        return json.load(f)["index_path"]
 
 
 def read_alias(spark: SparkSession, base_path: str, alias: str) -> DataFrame:
@@ -863,9 +840,9 @@ def reshard_index(
     operation behind a ``ShardConfig`` change (the reference's only
     answer is a full rebuild: shard count is fixed at job submission,
     ConfigParams NUM_SHARDS, and the ES index is created with it
-    before any reducer runs). Here it is one repartition job with the
-    SAME crash-safety discipline as ``compact_index`` (.compacting
-    tree + .old swap + ``recover_compact``-compatible layout).
+    before any reducer runs). Here it is one repartition job published
+    like every build (``_publish``: .compacting tree + .old swap +
+    ``recover_compact``).
 
     Scale note: with modulo hash routing a shard-count change moves
     ~(1 - 1/max(N,M)) of all rows — nearly everything — which is why
@@ -875,8 +852,6 @@ def reshard_index(
     doubling, but then shard→file pruning would need ring metadata;
     modulo + honest accounting is the simpler trade at Parquet-file
     granularity.)"""
-    import time
-
     t0 = time.monotonic()
     manifest = read_manifest(index_path)
     cfg = IndexConfig(
@@ -892,37 +867,22 @@ def reshard_index(
     # resurrect tombstones / duplicate superseded rows on the next
     # read_index_latest. Base rows read back with null _version, which
     # the merge-on-read resolvers already treat as version 0.
-    df = spark.read.option("mergeSchema", "true").parquet(index_path)
-    old_n = manifest["num_shards"]
+    df = read_index(spark, index_path, merge_schema=True)
     resharded = df.withColumn("old_shard", F.col("shard")).withColumn(
         "shard", shard_expr(cfg)
     )
     moved = resharded.filter(F.col("shard") != F.col("old_shard")).count()
     total = max(sum(manifest["shards"].values()), 1)
-    out = (
-        resharded.drop("old_shard")
-        .repartition(new_num_shards, F.col("shard"))
-    )
-    tmp = index_path.rstrip("/") + ".compacting"
-    out.write.mode("overwrite").partitionBy("shard").parquet(tmp)
-
+    manifest["resharded_from"] = manifest["num_shards"]
     manifest["num_shards"] = new_num_shards
-    manifest["resharded_from"] = old_n
     manifest["moved_fraction"] = round(moved / total, 6)
-    manifest["shards"] = _shard_counts(spark, tmp)
-    manifest["schema"] = out.schema.jsonValue()
-    manifest.setdefault("counters", {})["TIME_SPENT_RESHARDING_MS"] = (
-        time.monotonic() - t0
-    ) * 1000.0
-    _write_manifest(tmp, manifest)
-
-    import shutil
-
-    old = index_path.rstrip("/") + ".old"
-    os.rename(index_path, old)
-    os.rename(tmp, index_path)
-    shutil.rmtree(old)
-    return manifest
+    return _publish(
+        _layout(resharded.drop("old_shard"), new_num_shards, cfg.doc_id_col),
+        index_path,
+        manifest,
+        new_num_shards,
+        counters=lambda: {"TIME_SPENT_RESHARDING_MS": _ms_since(t0)},
+    )
 
 
 def diff_indexes(
@@ -1016,7 +976,7 @@ def vacuum_plan(
     plan; ``apply_vacuum`` executes it. The per-file verdict is one
     groupBy over the resolved log — no driver-side row pulls."""
     manifest = read_manifest(index_path)
-    df = spark.read.option("mergeSchema", "true").parquet(index_path)
+    df = read_index(spark, index_path, merge_schema=True)
     if UPSERT_VERSION_COL not in df.columns:
         return spark.createDataFrame(
             [],
@@ -1098,7 +1058,7 @@ def read_index_changes(
     rescanning the base. The version fence filters on the raw column
     so parquet row-group stats skip out-of-range delta files
     entirely; base rows (NULL version) are never change rows."""
-    df = spark.read.option("mergeSchema", "true").parquet(index_path)
+    df = read_index(spark, index_path, merge_schema=True)
     if UPSERT_VERSION_COL not in df.columns:
         return df.filter(F.lit(False))
     vc = F.col(UPSERT_VERSION_COL)

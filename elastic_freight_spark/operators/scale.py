@@ -1124,8 +1124,7 @@ def layout_zonemap_effectiveness(spark, sf_dir):
     Also reports mean per-file span in days (integer µs arithmetic).
 
     This is a planning SIMULATION (the real variant would read actual
-    file footers — zonemaps in the manifest, as build_range_index
-    records); it exists so the metric is hash-verifiable against
+    file footers); it exists so the metric is hash-verifiable against
     DuckDB. Neither layout single-partitions the fact (the round-6
     conversion): the shipdate-SORTED layout's file extents are pure
     value-at-rank selections on the shipdate ECDF (dates are monotone

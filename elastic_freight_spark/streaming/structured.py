@@ -45,6 +45,7 @@ Scale notes (the parts that matter at 1000 executors):
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 from typing import Iterable
@@ -55,7 +56,17 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
-from elastic_freight_spark.indexer import IndexConfig, shard_expr
+from elastic_freight_spark.indexer import (
+    COUNTER_DOC_CREATED,
+    COUNTER_DOC_FAILED,
+    IndexConfig,
+    _layout,
+    _new_manifest,
+    _seal,
+    _write_json,
+    _write_manifest,
+    shard_expr,
+)
 
 # Ship this module's functions (the applyInPandasWithState handler) to
 # Python workers by VALUE — executors must not need the package
@@ -108,8 +119,8 @@ def stream_index(
         obs_out = Observation(f"stream_{cfg.index_name}_{batch_id}_out")
         base = batch_df.observe(obs_in, F.count(F.lit(1)).alias("total"))
         good = base.filter(F.col(cfg.doc_id_col).isNotNull())
-        sharded = good.withColumn("shard", shard_expr(cfg)).repartition(
-            cfg.num_shards, F.col("shard")
+        sharded = _layout(
+            good.withColumn("shard", shard_expr(cfg)), cfg.num_shards, cfg.doc_id_col
         )
         observed = sharded.observe(obs_out, F.count(F.lit(1)).alias("created"))
         (
@@ -144,75 +155,45 @@ def _record_batch_drop(dest: str, batch_id: int, dropped: int) -> None:
     """Accumulate per-batch dropped-doc counts in a sidecar JSON next
     to the index data (driver-side; foreachBatch runs on the driver).
     Idempotent per batch_id so checkpointed batch replay after a
-    failure can't double count."""
-    import json
-
+    failure can't double count; replaced atomically, so a crash
+    mid-write keeps the earlier batches' counts."""
     os.makedirs(dest, exist_ok=True)
-    path = os.path.join(dest, STREAM_COUNTERS_NAME)
-    counts: dict = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            counts = json.load(f)
+    counts = _read_batch_drops(dest)
     counts[str(batch_id)] = dropped
-    with open(path, "w") as f:
-        json.dump(counts, f, indent=2, sort_keys=True)
+    _write_json(os.path.join(dest, STREAM_COUNTERS_NAME), counts)
+
+
+def _read_batch_drops(dest: str) -> dict:
+    path = os.path.join(dest, STREAM_COUNTERS_NAME)
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        return json.load(f)
 
 
 def finalize_stream_index(spark: SparkSession, cfg: IndexConfig) -> dict:
-    """Seal a streamed index: fill missing shards and write the
-    manifest from the appended table's actual state (the batch
-    indexer's post-phase, run once after the stream stops — the
-    analogue of the reference's driver-side post-process,
-    job/IndexingPostProcessor.java:144-246). The fail counter sums
-    the per-batch dropped-doc sidecar ``write_batch`` maintains; a
-    stream that committed zero rows finalizes to an all-empty (but
-    well-formed) manifest instead of raising."""
-    import json
-
+    """Seal a streamed index in place: the batch indexer's post-phase
+    (``indexer._seal`` — shard counts, placeholder shards, schema),
+    run once after the stream stops — the analogue of the reference's
+    driver-side post-process, job/IndexingPostProcessor.java:144-246.
+    The fail counter sums the per-batch dropped-doc sidecar
+    ``write_batch`` maintains; a stream that committed zero rows
+    finalizes to an all-empty (but well-formed) manifest instead of
+    raising."""
     from pyspark.errors import AnalysisException
 
-    from elastic_freight_spark.indexer import (
-        COUNTER_DOC_CREATED,
-        COUNTER_DOC_FAILED,
-        _fill_missing_shards,
-        _shard_counts,
-        _write_manifest,
-    )
-
-    dest = os.path.join(cfg.output_path, cfg.index_name)
-    shard_counts = _shard_counts(spark, dest)
-    created = sum(shard_counts.values())
-
-    failed = 0
-    sidecar = os.path.join(dest, STREAM_COUNTERS_NAME)
-    if os.path.exists(sidecar):
-        with open(sidecar) as f:
-            failed = sum(json.load(f).values())
-
-    schema = None
+    manifest = _new_manifest(cfg)
+    dest = manifest["path"]
     try:
-        written = spark.read.parquet(dest)
-        filled = _fill_missing_shards(spark, written.drop("shard").schema, dest, cfg, shard_counts)
-        schema = written.schema.jsonValue()
+        schema = spark.read.parquet(dest).schema
     except AnalysisException:
         # zero rows committed → no parquet files to infer a schema
-        # from, so placeholder shards can't be typed; still emit a
-        # well-formed manifest (same fallback as _shard_counts)
-        filled = []
-
-    manifest = {
-        "index": cfg.index_name,
-        "num_shards": cfg.num_shards,
-        "doc_id_col": cfg.doc_id_col,
-        "routing": cfg.routing,
-        "path": dest,
-        "counters": {COUNTER_DOC_CREATED: created, COUNTER_DOC_FAILED: failed},
-        "shards": shard_counts,
-        "missing_shards_filled": filled,
-        "streamed": True,
-    }
-    if schema is not None:
-        manifest["schema"] = schema
+        # from, so placeholder shards can't be typed
+        schema = None
+    manifest["streamed"] = True
+    manifest["counters"] = {COUNTER_DOC_FAILED: sum(_read_batch_drops(dest).values())}
+    _seal(spark, dest, manifest, cfg.num_shards, schema)
+    manifest["counters"][COUNTER_DOC_CREATED] = sum(manifest["shards"].values())
     os.makedirs(dest, exist_ok=True)
     _write_manifest(dest, manifest)
     return manifest

@@ -226,55 +226,6 @@ def test_compact_index_folds_files_preserves_data(spark, tmp_path_factory):
     assert {int(k) for k in man2["shards"]} == {0, 1, 2, 3}
 
 
-def test_range_index_prunes_shards_for_range_scan(spark, tmp_path_factory):
-    from elastic_freight_spark.indexer import (
-        IndexConfig,
-        build_range_index,
-        read_doc_range,
-        read_index,
-    )
-    from elastic_freight_spark.plans import (
-        assert_partition_pruned,
-        execution_metrics,
-        summarize,
-    )
-    from elastic_freight_spark.session import load_tables
-
-    events = load_tables(spark, "/root/testdata/sf0.01")["events"]
-    out = str(tmp_path_factory.mktemp("range_idx"))
-    man = build_range_index(
-        events,
-        IndexConfig(
-            index_name="r", doc_id_col="event_id", num_shards=8, output_path=out
-        ),
-    )
-    assert len(man["range_bounds"]) == 7
-    # shards hold non-overlapping contiguous ranges
-    from pyspark.sql import functions as F
-
-    stats = (
-        read_index(spark, man["path"])
-        .groupBy("shard")
-        .agg(F.min("event_id").alias("lo"), F.max("event_id").alias("hi"))
-        .orderBy("shard")
-        .collect()
-    )
-    for prev, cur in zip(stats, stats[1:]):
-        assert prev["hi"] < cur["lo"]
-
-    # a narrow range scan reads a strict subset of shard files
-    total_files = summarize(
-        execution_metrics(read_index(spark, man["path"]))
-    )["scan_files"]
-    narrow = read_doc_range(spark, man["path"], 100, 200)
-    assert_partition_pruned(narrow, "shard")
-    s = summarize(execution_metrics(narrow))
-    assert 0 < s["scan_files"] < total_files
-    # correctness: same rows as a full-scan filter
-    want = events.filter((F.col("event_id") >= 100) & (F.col("event_id") <= 200)).count()
-    assert narrow.count() == want
-
-
 def test_lcg_routing_rejects_string_ids(spark, tmp_path_factory):
     import pytest as _pytest
 
@@ -1195,3 +1146,63 @@ def test_manifest_write_survives_a_crash(tmp_path, monkeypatch):
         _write_manifest(str(tmp_path), {"index": "x", "shards": {"0": 6}})
     monkeypatch.undo()
     assert read_manifest(str(tmp_path)) == before
+
+
+def test_failed_rebuild_leaves_previous_index(spark, tmp_path_factory):
+    """A rebuild whose write job fails partway raises and leaves the
+    previous tree and manifest as they were: the new tree is staged
+    beside the live one and swapped in only once complete. The rebuild
+    fails with adaptive execution on (the failing map stage runs before
+    the write command) and off (the map stage runs inside the write
+    job, after an in-place overwrite has deleted the old tree)."""
+    out = str(tmp_path_factory.mktemp("failed_rebuild"))
+    df, man = _small_index(spark, out, n_docs=100)
+    rows = sorted(read_index(spark, man["path"]).collect())
+    manifest = read_manifest(man["path"])
+    poisoned = df.withColumn(
+        "payload",
+        F.when(F.col("doc_id") == 57, F.raise_error(F.lit("boom"))).otherwise(F.col("payload")),
+    )
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        for enabled in ("true", "false"):
+            spark.conf.set("spark.sql.adaptive.enabled", enabled)
+            with pytest.raises(Exception, match="boom"):
+                build_index(poisoned, IndexConfig("small", "doc_id", 4, out))
+            assert sorted(read_index(spark, man["path"]).collect()) == rows
+            assert read_manifest(man["path"]) == manifest
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def test_compaction_keeps_tombstones(spark, tmp_path_factory):
+    """Compaction only changes the file layout: pending upserts keep
+    their ``_version``/``_op`` stamps, so tombstoned docs stay dead."""
+    from elastic_freight_spark.indexer import compact_index, read_index_latest, upsert_index
+
+    out = str(tmp_path_factory.mktemp("compact_tombstones"))
+    df, man = _small_index(spark, out, n_docs=100)
+    upsert_index(df.filter(F.col("doc_id") % 2 == 0).select("doc_id"), man["path"], delete=True)
+    assert read_index_latest(spark, man["path"]).count() == 50
+    compact_index(spark, man["path"])
+    assert read_index_latest(spark, man["path"]).count() == 50
+
+
+def test_catalog_write_survives_a_crash(spark, tmp_path_factory, monkeypatch):
+    """A crash while ``merge_manifests`` writes the catalog leaves the
+    previous catalog whole."""
+    from elastic_freight_spark.indexer import merge_manifests, read_catalog
+
+    out = str(tmp_path_factory.mktemp("torn_catalog"))
+    _, man = _small_index(spark, out)
+    first = merge_manifests([man["path"]], out, spark=spark)
+
+    def torn(obj, f, **kwargs):
+        f.write('{"indices": ')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn)
+    with pytest.raises(OSError):
+        merge_manifests([man["path"]], out, spark=spark)
+    monkeypatch.undo()
+    assert read_catalog(out) == first
